@@ -24,23 +24,35 @@ object Verify {
     // driver round died with ZERO verify outputs when the sequential dump
     // starved its phase budget; wall time here is correctness insurance.
     val verifyThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(verifyThreads)
+    // daemon threads: a worker stuck in a query cannot keep the JVM alive
+    // once main is done or has failed
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(verifyThreads, (r: Runnable) => {
+      val t = new Thread(r, "graft-verify")
+      t.setDaemon(true)
+      t
+    })
     val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-    val tasks = selected.map { case (name, fn) =>
-      pool.submit(new Runnable {
-        def run(): Unit =
-          try {
-            spark.sparkContext.setJobDescription(s"verify $name")
-            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-          } catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    try {
+      val tasks = selected.map { case (name, fn) =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            // a failed query leaves its reason next to the dumps
+            val failed = Paths.get(s"$outDir/$name.failed")
+            Files.deleteIfExists(failed)
+            try {
+              spark.sparkContext.setJobDescription(s"verify $name")
+              fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+                .parquet(s"$outDir/$name")
+            } catch { case e: Throwable =>
+              System.err.println(s"[verify] $name failed: ${e.getMessage}")
+              Files.writeString(failed, e.toString)
+            }
           }
-      })
-    }
-    tasks.foreach(_.get())
-    pool.shutdown()
+        })
+      }
+      tasks.foreach(_.get())
+    } finally pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

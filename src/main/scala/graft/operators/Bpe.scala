@@ -94,32 +94,32 @@ object Bpe {
     * silent early-stop would desynchronize the fixed-depth oracle replay. */
   def train(docs: DataFrame, merges: Int, textCol: String = "text"): Model = {
     require(merges >= 1, "merges must be >= 1")
-    var frame = initSymbols(wordFreq(docs, textCol)).cut()
-    val total = frame.agg(coalesce(sum(col("wfreq")), lit(0L))).collect()(0).getLong(0)
-    require(total > 0, "BPE training corpus is empty")
-    var tokens = total
-    val steps = Seq.newBuilder[MergeStep]
-    for (step <- 1 to merges) {
+    val init = initSymbols(wordFreq(docs, textCol)).cut()
+    // each applied merge removes exactly one (wfreq-weighted) symbol, so
+    // a merge's occurrence count falls out of the token totals before and
+    // after it — no second window-chain execution per iteration
+    val tokens = Lineage.once(
+      _.agg(coalesce(sum(col("wfreq")), lit(0L))).collect()(0).getLong(0))
+    require(tokens(init) > 0, "BPE training corpus is empty")
+    // (left, right, pair count, corpus tokens before the merge)
+    val picked = Seq.newBuilder[(String, String, Long, Long)]
+    val symbols = Lineage.iterate(init, merges) { round =>
+      val frame = round.prev
       val best = withNext(frame).filter(col("nxt").isNotNull)
         .groupBy("sym", "nxt").agg(sum(col("wfreq")).as("cnt"))
         .orderBy(col("cnt").desc, col("sym").asc, col("nxt").asc)
         .limit(1).collect()
       require(best.nonEmpty,
-        s"BPE pair supply exhausted at step $step of $merges — lower `merges`")
-      val (left, right, cnt) =
-        (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-      val next = applyMerge(frame, left, right).cut()
-      // each applied merge removes exactly one (wfreq-weighted) symbol, so
-      // the occurrence count falls out of the token total — no second
-      // window-chain execution per iteration
-      val after = next.agg(coalesce(sum(col("wfreq")), lit(0L)))
-        .collect()(0).getLong(0)
-      frame.unpersist()
-      frame = next
-      steps += MergeStep(step, left, right, cnt, tokens - after, after)
-      tokens = after
-    }
-    Model(steps.result(), frame)
+        s"BPE pair supply exhausted at step ${round.index + 1} of $merges — lower `merges`")
+      val (left, right) = (best(0).getString(0), best(0).getString(1))
+      picked += ((left, right, best(0).getLong(2), tokens(frame)))
+      applyMerge(frame, left, right)
+    }()
+    val steps = picked.result()
+    val after = steps.map(_._4).tail :+ tokens(symbols)
+    Model(steps.zip(after).zipWithIndex.map { case (((left, right, cnt, before), a), i) =>
+      MergeStep(i + 1, left, right, cnt, before - a, a)
+    }, symbols)
   }
 
   /** The learned trajectory as a DataFrame (merges rows — driver-bounded
@@ -154,13 +154,10 @@ object Bpe {
     * deploy halves (encode, audit) broadcast. Vocab-bounded throughout. */
   private def perWordTokens(docs: DataFrame, model: Model,
                             textCol: String): DataFrame = {
-    var frame = initSymbols(wordFreq(docs, textCol)).cut()
-    for (s <- model.steps) {
-      val next = applyMerge(frame, s.left, s.right).cut()
-      frame.unpersist()
-      frame = next
-    }
-    frame.groupBy("word").agg(count(lit(1)).as("word_tokens"))
+    val steps = model.steps.toIndexedSeq
+    Lineage.iterate(initSymbols(wordFreq(docs, textCol)).cut(), steps.size) { round =>
+      applyMerge(round.prev, steps(round.index).left, steps(round.index).right)
+    }().groupBy("word").agg(count(lit(1)).as("word_tokens"))
   }
 
   /** C72: tokenizer FERTILITY audit — the per-group (language, in the

@@ -283,32 +283,20 @@ object Dedup {
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .distinct().cut()
-    var checkpointed = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).cut()
-    var labels = checkpointed
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    // each round's frame: (node, label before the round, next label)
+    val init = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label"), col("node").as("next")).cut()
+    val last = Lineage.converge(init, maxIter,
+        s"cluster resolution did not converge in $maxIter rounds") { round =>
+      val labels = round.prev.select(col("node"), col("next").as("label"))
       val neighborMin = edges
         .join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(min(col("label")).as("nmin"))
-      val updated = labels.join(neighborMin, Seq("node"), "left_outer")
+      labels.join(neighborMin, Seq("node"), "left_outer")
         .select(col("node"), col("label"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("next"))
-        .cut()
-      changed = updated.filter(col("next") < col("label")).count()
-      // the new checkpoint is materialized — free the superseded round's
-      // blocks NOW (leaking one snapshot per round starves executor
-      // storage over long iterations; the final result only depends on
-      // the last checkpoint)
-      checkpointed.unpersist(blocking = false)
-      checkpointed = updated
-      labels = updated.select(col("node"), col("next").as("label"))
-      iter += 1
-    }
-    require(changed == 0, s"cluster resolution did not converge in $maxIter rounds")
-    edges.unpersist(blocking = false)
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    } { (_, next) => next.filter(col("next") < col("label")).count() == 0L }
+    last.select(col("node").as("doc_id"), col("next").as("cluster_id"))
   }
 
   /** C26 (scale alternative): large-star / small-star connected
@@ -335,13 +323,13 @@ object Dedup {
     * equal, so either can serve q74's oracle. */
   def resolveClustersStar(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                           maxIter: Int = 30): DataFrame = {
-    var edges = pairs
+    val edges0 = pairs
       .select(greatest(col(aCol), col(bCol)).as("u"), least(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
       .cut()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val edges = Lineage.converge(edges0, maxIter,
+        s"large-star/small-star did not converge in $maxIter rounds") { round =>
+      val edges = round.prev
       // LARGE-STAR over the symmetric view: (v, min(N(u) ∪ {u})) for v > u
       val sym = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       val minsL = sym.groupBy("u").agg(min(col("v")).as("mn"))
@@ -355,15 +343,11 @@ object Dedup {
       val fromNbrs = ls.join(minsS, "u").filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
       val fromSelf = minsS.select(col("u"), col("m").as("v"))
-      val next = fromNbrs.unionByName(fromSelf)
+      fromNbrs.unionByName(fromSelf)
         .filter(col("u") =!= col("v")).distinct()
-        .cut()
-      converged = next.exceptAll(edges).isEmpty && edges.exceptAll(next).isEmpty
-      edges.unpersist(blocking = false)
-      edges = next
-      iter += 1
+    } { (round, next) =>
+      next.exceptAll(round.prev).isEmpty && round.prev.exceptAll(next).isEmpty
     }
-    require(converged, s"large-star/small-star did not converge in $maxIter rounds")
     // fixpoint is a star forest: u → component min; roots never appear as u
     val roots = edges.select(col("v")).distinct()
       .join(edges.select(col("u")).distinct(), col("v") === col("u"), "left_anti")

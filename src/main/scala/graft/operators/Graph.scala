@@ -157,38 +157,27 @@ object Graph {
     require(rounds >= 1)
     val und = symmetrize(edges)
       .distinct().cut()
-    var lbl = und.select(col("src").as("node")).distinct()
+    val lbl0 = und.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("l"))
       .cut()
-    var prevSum: Option[java.math.BigDecimal] = None
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      // nbMin feeds BOTH sides of the pointer-hop self-join — lazy
-      // persist so the neighbor-min aggregation runs once per round,
-      // not once per side
-      val nbMin = und.join(lbl, und("src") === lbl("node"))
+    val labelSum = Lineage.once(
+      _.agg(sum(col("l").cast("decimal(38,0)"))).head().getDecimal(0))
+    val lbl = Lineage.iterate(lbl0, rounds) { round =>
+      val lbl = round.prev
+      // nbMin feeds BOTH sides of the pointer-hop self-join — cached so
+      // the neighbor-min aggregation runs once per round, not once per side
+      val nbMin = round.persist(und.join(lbl, und("src") === lbl("node"))
         .select(und("dst").as("node"), col("l"))
         .unionByName(lbl)
-        .groupBy("node").agg(min(col("l")).as("l"))
-        .persist()
+        .groupBy("node").agg(min(col("l")).as("l")))
       // pointer hop l ← label(l): rename one side so the self-join
       // resolves unambiguously
       val parent = nbMin.select(col("node").as("pnode"), col("l").as("pl"))
-      val prev = lbl
-      lbl = nbMin.join(parent, col("l") === col("pnode"))
+      nbMin.join(parent, col("l") === col("pnode"))
         .select(col("node"), col("pl").as("l"))
-        .cut()
-      // the new checkpoint is materialized — free the superseded round's
-      // blocks and the round-local aggregate NOW (the resolveClusters
-      // discipline: leaking a snapshot per round starves storage over
-      // long iterations)
-      nbMin.unpersist(blocking = false)
-      Lineage.free(prev)
-      val s = lbl.agg(sum(col("l").cast("decimal(38,0)"))).head().getDecimal(0)
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      r += 1
+    } { (round, next) =>
+      // round 0 always moves labels on a non-edgeless graph: skip its sum
+      round.index > 0 && labelSum(round.prev) == labelSum(next)
     }
     lbl.select(col("node"), col("l").as("comp"))
   }
@@ -214,10 +203,10 @@ object Graph {
     * replay the same schedule, and the q188 discipline (post-
     * convergence rounds are no-ops) keeps the oracle exact either way.
     *
-    * Scale shape per round: one co-partitioned edges⋈labels join (twice
-    * — both endpoints), one bounded per-component min-struct aggregate,
-    * the label-frame contraction, lineage cuts per round. Nothing is
-    * ever quadratic; the edge frame never grows.
+    * Scale shape per round: one bounded per-component min-struct
+    * aggregate over the crossing edges, the contraction, then the
+    * crossing edges relabeled through it (a join per endpoint) — the
+    * loop frame only shrinks. Nothing is ever quadratic.
     *
     * @param edges (src, dst, w) — undirected; parallel edges collapse
     *              to their min weight; self-loops dropped.
@@ -231,49 +220,36 @@ object Graph {
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min(col("w")).as("w"))
       .cut()
-    var lab = ecan.select(col("a").as("node"))
-      .union(ecan.select(col("b").as("node"))).distinct()
-      .select(col("node"), col("node").as("l"))
-      .cut()
-    var mst: Option[DataFrame] = None
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      val la = lab.select(col("node").as("na"), col("l").as("lu"))
-      val lb = lab.select(col("node").as("nb"), col("l").as("lv"))
-      val cross = ecan
-        .join(la, col("a") === col("na")).join(lb, col("b") === col("nb"))
-        .filter(col("lu") =!= col("lv"))
-        .select("w", "a", "b", "lu", "lv")
+    // round 0's crossing edges: every edge, each endpoint its own component
+    val cross0 = ecan.select(col("w"), col("a"), col("b"),
+      col("a").as("lu"), col("b").as("lv")).cut()
+    // every round's selection stays checkpointed: the forest union reads them
+    val picked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    Lineage.iterate(cross0, if (cross0.isEmpty) 0 else rounds) { round =>
+      val cross = round.prev
+      val e = struct(col("w"), col("a"), col("b"), col("lu"), col("lv"))
+      val sel = cross.select(col("lu").as("comp"), e.as("e"))
+        .unionByName(cross.select(col("lv").as("comp"), e.as("e")))
+        .groupBy("comp").agg(min(col("e")).as("e"))
+        .select(col("e.w").as("w"), col("e.a").as("a"), col("e.b").as("b"),
+          col("e.lu").as("lu"), col("e.lv").as("lv"))
+        .distinct()
         .cut()
-      if (cross.isEmpty) { done = true }
-      else {
-        val e = struct(col("w"), col("a"), col("b"), col("lu"), col("lv"))
-        val sel = cross.select(col("lu").as("comp"), e.as("e"))
-          .unionByName(cross.select(col("lv").as("comp"), e.as("e")))
-          .groupBy("comp").agg(min(col("e")).as("e"))
-          .select(col("e.w").as("w"), col("e.a").as("a"), col("e.b").as("b"),
-            col("e.lu").as("lu"), col("e.lv").as("lv"))
-          .distinct()
-          .cut()
-        mst = Some(mst.map(_.unionByName(sel.select("a", "b", "w")))
-          .getOrElse(sel.select("a", "b", "w")))
-        val contraction = components(
-          sel.select(col("lu").as("src"), col("lv").as("dst")))
-        val prevLab = lab
-        lab = lab.join(contraction, lab("l") === contraction("node"), "left")
-          .select(lab("node"), coalesce(col("comp"), lab("l")).as("l"))
-          .cut()
-        // the new label frame is materialized — free the superseded one
-        // (sel stays: the accumulated mst union still references every
-        // round's selection; cross is freed either way below)
-        Lineage.free(prevLab)
-      }
-      // the round's crossing frame is dead once sel/isEmpty consumed it
-      Lineage.free(cross)
-      r += 1
-    }
-    mst.map(_.distinct().select("a", "b", "w"))
+      picked += sel.select("a", "b", "w")
+      // contract: relabel both endpoints of the still-crossing edges;
+      // labels only merge, so an edge inside one component never crosses
+      // again
+      val comp = components(sel.select(col("lu").as("src"), col("lv").as("dst")))
+      val cu = comp.select(col("node").as("nu"), col("comp").as("cu"))
+      val cv = comp.select(col("node").as("nv"), col("comp").as("cv"))
+      cross.join(cu, col("lu") === col("nu"), "left")
+        .join(cv, col("lv") === col("nv"), "left")
+        .select(col("w"), col("a"), col("b"),
+          coalesce(col("cu"), col("lu")).as("lu"), coalesce(col("cv"), col("lv")).as("lv"))
+        .filter(col("lu") =!= col("lv"))
+    } { (_, next) => next.isEmpty }
+    picked.reduceOption(_ unionByName _)
+      .map(_.distinct().select("a", "b", "w"))
       .getOrElse(ecan.filter(lit(false)).select("a", "b", "w"))
   }
 
@@ -447,29 +423,21 @@ object Graph {
     *         degree; empty when the k-core is empty. */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 12): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var und = symmetrize(edges)
-      .distinct().cut()
-    var prevCount = -1L
-    var r = 0
-    while (r < rounds && prevCount != 0L) {
-      val cnt = und.count()
-      if (cnt == prevCount) r = rounds // fixed point — skip the rest
-      else {
-        prevCount = cnt
-        val keep = und.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("d"))
-          .filter(col("d") >= k)
-          .select("node")
-        val keepDst = keep.select(col("node").as("node2"))
-        val prev = und
-        und = und
-          .join(keep, und("src") === keep("node"), "left_semi")
-          .join(keepDst, col("dst") === keepDst("node2"), "left_semi")
-          .cut()
-        // new frame materialized — free the superseded round's blocks
-        Lineage.free(prev)
-        r += 1
-      }
+    val size = Lineage.once(_.count())
+    val und = Lineage.iterate(symmetrize(edges).distinct().cut(), rounds) { round =>
+      val und = round.prev
+      val keep = und.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("d"))
+        .filter(col("d") >= k)
+        .select("node")
+      val keepDst = keep.select(col("node").as("node2"))
+      und
+        .join(keep, und("src") === keep("node"), "left_semi")
+        .join(keepDst, col("dst") === keepDst("node2"), "left_semi")
+    } { (round, next) =>
+      // an emptied core, or a round that peeled nothing: the fixed point
+      val left = size(next)
+      left == 0L || left == size(round.prev)
     }
     und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
@@ -550,43 +518,34 @@ object Graph {
     *         the truss is empty. */
   def kTruss(edges: DataFrame, k: Int, rounds: Int = 6): DataFrame = {
     require(k >= 3 && rounds >= 1)
-    var e = edges.select(
+    val e0 = edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") < col("b"))
       .distinct().cut()
     val minSup = (k - 2).toLong
-    var prevCount = -1L
-    var r = 0
-    while (r < rounds && prevCount != 0L) {
-      val cnt = e.count()
-      if (cnt == prevCount) r = rounds // fixed point — skip the rest
-      else {
-        prevCount = cnt
-        val bc = e.select(col("a").as("b2"), col("b").as("c"))
-        val ac = e.select(col("a").as("a3"), col("b").as("c3"))
-        // three support projections consume the enumeration — lazy
-        // persist so the double self-join runs once per round, not 3×
-        val tris = e.join(bc, col("b") === col("b2"))
-          .join(ac, col("a") === col("a3") && col("c") === col("c3"))
-          .select(col("a"), col("b"), col("c"))
-          .persist()
-        val keep = tris.select(col("a"), col("b"))
-          .unionAll(tris.select(col("a"), col("c").as("b")))
-          .unionAll(tris.select(col("b").as("a"), col("c").as("b")))
-          .groupBy("a", "b").agg(count(lit(1)).as("s"))
-          .filter(col("s") >= minSup)
-          .select("a", "b")
-        val prev = e
-        e = e.join(keep, Seq("a", "b"), "left_semi").cut()
-        // new frame materialized — free the round-local enumeration and
-        // the superseded edge frame
-        tris.unpersist(blocking = false)
-        Lineage.free(prev)
-        r += 1
-      }
+    val size = Lineage.once(_.count())
+    Lineage.iterate(e0, rounds) { round =>
+      val e = round.prev
+      val bc = e.select(col("a").as("b2"), col("b").as("c"))
+      val ac = e.select(col("a").as("a3"), col("b").as("c3"))
+      // three support projections consume the enumeration — cached so
+      // the double self-join runs once per round, not 3×
+      val tris = round.persist(e.join(bc, col("b") === col("b2"))
+        .join(ac, col("a") === col("a3") && col("c") === col("c3"))
+        .select(col("a"), col("b"), col("c")))
+      val keep = tris.select(col("a"), col("b"))
+        .unionAll(tris.select(col("a"), col("c").as("b")))
+        .unionAll(tris.select(col("b").as("a"), col("c").as("b")))
+        .groupBy("a", "b").agg(count(lit(1)).as("s"))
+        .filter(col("s") >= minSup)
+        .select("a", "b")
+      e.join(keep, Seq("a", "b"), "left_semi")
+    } { (round, next) =>
+      // an emptied truss, or a round that peeled nothing: the fixed point
+      val left = size(next)
+      left == 0L || left == size(round.prev)
     }
-    e
   }
 
   /** C128: LABEL-PROPAGATION community detection (Raghavan et al. 2007,
@@ -623,27 +582,21 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val und = symmetrize(edges)
       .distinct().cut()
-    var lbl = und.select(col("src").as("node")).distinct()
+    val lbl0 = und.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
       .cut()
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+    val lbl = Lineage.iterate(lbl0, rounds) { round =>
+      val lbl = round.prev
       val votes = und.join(lbl, und("src") === lbl("node"))
         .select(und("dst").as("node"), col("lab"))
         .unionByName(lbl)
-      val next = votes.groupBy("node", "lab").agg(count(lit(1)).as("c"))
+      votes.groupBy("node", "lab").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(
           Window.partitionBy("node").orderBy(col("c").desc, col("lab").asc)))
         .filter(col("rn") === 1).select("node", "lab")
-        .cut()
-      val changed = next.join(lbl.select(col("node"), col("lab").as("old")), "node")
-        .filter(col("lab") =!= col("old")).count()
-      converged = changed == 0L
-      // change-count consumed the old frame — free it before the swap
-      Lineage.free(lbl)
-      lbl = next
-      r += 1
+    } { (round, next) =>
+      next.join(round.prev.select(col("node"), col("lab").as("old")), "node")
+        .filter(col("lab") =!= col("old")).count() == 0L
     }
     lbl.select(col("node"), col("lab").as("community"))
   }
@@ -692,10 +645,8 @@ object Graph {
     val m2 = deg.agg(coalesce(sum("d"), lit(0L))).head().getLong(0)
     if (m2 == 0L)
       return deg.select(col("node"), col("node").as("community"))
-    var lab = deg.select(col("node"), col("node").as("lab")).cut()
-    var s = 0
-    var converged = false
-    while (s < sweeps && !converged) {
+    val lab = Lineage.iterate(deg.select(col("node"), col("node").as("lab")).cut(), sweeps) { round =>
+      val lab = round.prev
       val tot = lab.join(deg, "node")
         .groupBy(col("lab").as("c")).agg(sum("d").as("tot"))
       val kic = und
@@ -712,19 +663,13 @@ object Graph {
         .withColumn("score", expr(
           s"CAST($m2 AS DECIMAL(38,0)) * k - " +
             "CAST(d AS DECIMAL(38,0)) * (tot - CASE WHEN c = cur THEN d ELSE 0 END)"))
-      val next = cand
+      cand
         .withColumn("rn", row_number().over(
           Window.partitionBy("node").orderBy(col("score").desc, col("c").asc)))
         .filter(col("rn") === 1).select(col("node"), col("c").as("lab"))
-        .cut()
-      val changed = next
-        .join(lab.select(col("node"), col("lab").as("__old")), "node")
-        .filter(col("lab") =!= col("__old")).count()
-      converged = changed == 0L
-      // change-count consumed the old frame — free it before the swap
-      Lineage.free(lab)
-      lab = next
-      s += 1
+    } { (round, next) =>
+      next.join(round.prev.select(col("node"), col("lab").as("__old")), "node")
+        .filter(col("lab") =!= col("__old")).count() == 0L
     }
     lab.select(col("node"), col("lab").as("community"))
   }

@@ -30,29 +30,20 @@ object Hierarchy {
   def ancestors(edges: DataFrame, childCol: String, parentCol: String,
                 maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1)
-    var acc = edges
+    val acc0 = edges
       .filter(col(childCol) =!= col(parentCol))
       .select(col(childCol).as("node"), col(parentCol).as("anc"),
         lit(1L).as("depth"))
       .distinct().cut()
-    var n = acc.count()
-    var iter = 0
-    var done = n == 0
-    while (!done) {
-      require(iter < maxIter,
-        s"hierarchy deeper than 2^$maxIter — raise maxIter")
+    val size = Lineage.once(_.count())
+    if (size(acc0) == 0L) acc0
+    else Lineage.converge(acc0, maxIter, s"hierarchy deeper than 2^$maxIter — raise maxIter") { round =>
+      val acc = round.prev
       val ext = acc.as("a")
         .join(acc.as("b"), col("a.anc") === col("b.node"))
         .select(col("a.node").as("node"), col("b.anc").as("anc"),
           (col("a.depth") + col("b.depth")).as("depth"))
-      val next = acc.unionByName(ext).distinct().cut()
-      val m = next.count()
-      done = m == n
-      acc.unpersist()
-      acc = next
-      n = m
-      iter += 1
-    }
-    acc
+      acc.unionByName(ext).distinct()
+    } { (round, next) => size(next) == size(round.prev) }
   }
 }

@@ -94,9 +94,10 @@ object Rank {
     require(totals.getLong(0) == nS, "every seed must be a node of the graph")
     val hasDanglings = totals.getLong(1) > 0L
     val teleport = ((100L - dampingPct) * scale / 100L) / nS
-    var r = nodes.select(col("node"), col("__seed"), col("__dang"),
+    val r0 = nodes.select(col("node"), col("__seed"), col("__dang"),
       when(col("__seed"), lit(scale / nS)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to iters) {
+    Lineage.iterate(r0, iters) { round =>
+      val r = round.prev
       val contrib = ed.join(r, ed("src") === r("node"))
         .select(ed("dst").as("node"), expr("r * w div wt").as("c"))
         .groupBy("node").agg(sum(col("c")).as("s"))
@@ -109,16 +110,11 @@ object Rank {
             .select(expr(s"dmass div ${nS}L").as("dshare"))
           joined.crossJoin(broadcast(dshare))
         } else joined.withColumn("dshare", lit(0L))
-      val prev = r
-      r = withShare
+      withShare
         .select(col("node"), col("__seed"), col("__dang"),
           (expr(s"$dampingPct * (coalesce(s, 0L) + if(__seed, dshare, 0L)) div 100") +
             when(col("__seed"), lit(teleport)).otherwise(lit(0L))).as("r"))
-        .cut()
-      // new rank frame materialized — free the superseded round's blocks
-      Lineage.free(prev)
-    }
-    r.select("node", "r")
+    }().select("node", "r")
   }
 
   /** Multi-source BFS SEED DISTANCE — hop count from the nearest seed,
@@ -142,22 +138,17 @@ object Rank {
                    includeUnreached: Boolean = false): DataFrame = {
     require(maxHops >= 0)
     val ed = edges.select("src", "dst").distinct().cut()
-    var dist = seeds.select(col("node")).distinct()
+    val dist0 = seeds.select(col("node")).distinct()
       .select(col("node"), lit(0L).as("d")).cut()
-    var frontier = dist
-    var k = 1
-    while (k <= maxHops && !frontier.isEmpty) {
-      val expand = ed.join(frontier, ed("src") === frontier("node"))
+    // round h expands the frontier: the nodes first reached at hop h
+    def frontier(dist: DataFrame, h: Int) = dist.filter(col("d") === h)
+    val dist = Lineage.iterate(dist0, if (maxHops > 0 && !dist0.isEmpty) maxHops else 0) { round =>
+      val f = frontier(round.prev, round.index)
+      val expand = ed.join(f, ed("src") === f("node"))
         .select(ed("dst").as("node"), (col("d") + 1).as("d"))
-      val prev = dist
-      dist = dist.unionByName(expand)
+      round.prev.unionByName(expand)
         .groupBy("node").agg(min(col("d")).as("d"))
-        .cut()
-      // new frame materialized — free the superseded round's blocks
-      Lineage.free(prev)
-      frontier = dist.filter(col("d") === k)
-      k += 1
-    }
+    } { (round, next) => frontier(next, round.index + 1).isEmpty }
     if (!includeUnreached) dist
     else ed.select(col("src").as("node")).distinct()
       .join(dist, Seq("node"), "left")
@@ -193,31 +184,26 @@ object Rank {
     require(ed.filter(col("w") < 0).isEmpty,
       "weightedSeedCost requires non-negative weights (Bellman-Ford with " +
         "negative edges needs V-1 rounds and a cycle check — out of contract)")
-    var dist = seeds.select(col("node")).distinct()
+    val dist0 = seeds.select(col("node")).distinct()
       .select(col("node"), lit(0L).as("cost")).cut()
     // (Σcost, |reached|) is a sound fixed-point signature: costs only
     // decrease under the min-agg and new nodes only add — equal pairs ⇒
     // nothing changed
-    var prevSig: Option[(java.math.BigDecimal, Long)] = None
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val relax = ed.join(dist, ed("src") === dist("node"))
-        .select(ed("dst").as("node"), (col("cost") + col("w")).as("cost"))
-      val prev = dist
-      dist = dist.unionByName(relax)
-        .groupBy("node").agg(min(col("cost")).as("cost"))
-        .cut()
-      // new frame materialized — free the superseded round's blocks
-      Lineage.free(prev)
+    val signature = Lineage.once { dist =>
       val s = dist.agg(sum(col("cost").cast("decimal(38,0)")).as("s"),
         count(lit(1)).as("n")).head()
-      val sig = (s.getDecimal(0), s.getLong(1))
-      converged = prevSig.contains(sig)
-      prevSig = Some(sig)
-      r += 1
+      (s.getDecimal(0), s.getLong(1))
     }
-    dist
+    Lineage.iterate(dist0, rounds) { round =>
+      val dist = round.prev
+      val relax = ed.join(dist, ed("src") === dist("node"))
+        .select(ed("dst").as("node"), (col("cost") + col("w")).as("cost"))
+      dist.unionByName(relax)
+        .groupBy("node").agg(min(col("cost")).as("cost"))
+    } { (round, next) =>
+      // the seeds' own signature is never taken: round 0 compares nothing
+      round.index > 0 && signature(round.prev) == signature(next)
+    }
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) — the link-analysis dual to
@@ -258,13 +244,16 @@ object Rank {
     // scores are non-negative), so the r9 per-half-round zero-fill join
     // against the node frame is dropped too; the fill happens once, in
     // the final output.
-    def pass(score: DataFrame, joinKey: String, outKey: String,
-             scoreCol: String): DataFrame = {
-      val sums = ed.join(score, ed(joinKey) === score("node"))
-        .select(ed(outKey).as("node"),
-          (col(scoreCol).cast("decimal(38,0)") * col("w")).as("c"))
+    // half-round `half` turns (node, x) scores of one side into the
+    // other side's raw sums (node, s): even halves hub → authority
+    // (score on src, sum on dst), odd halves authority → hub
+    def sums(score: DataFrame, half: Int): DataFrame = {
+      val (joinKey, outKey) = if (half % 2 == 0) ("src", "dst") else ("dst", "src")
+      ed.join(score, ed(joinKey) === score("node"))
+        .select(ed(outKey).as("node"), (col("x").cast("decimal(38,0)") * col("w")).as("c"))
         .groupBy("node").agg(sum(col("c")).as("s"))
-        .cut()
+    }
+    def normalize(sums: DataFrame, scoreCol: String): DataFrame = {
       val mx = sums.agg(max(col("s"))).head().getDecimal(0)
       if (mx != null && mx.signum > 0)
         sums.select(col("node"),
@@ -272,12 +261,14 @@ object Rank {
             .as(scoreCol))
       else sums.select(col("node"), lit(0L).as(scoreCol))
     }
-    var hub = nodes.select(col("node"), lit(10000L).as("h"))
-    var auth = nodes.select(col("node"), lit(10000L).as("a"))
-    for (_ <- 1 to iters) {
-      auth = pass(hub, "src", "dst", "h").withColumnRenamed("h", "a")
-      hub = pass(auth, "dst", "src", "a").withColumnRenamed("a", "h")
-    }
+    // every half-round but the last: the loop keeps the final authority
+    // sums alive for both the last hub half and the output
+    val authSums = Lineage.iterate(nodes.select(col("node"), lit(10000L).as("x")),
+        2 * iters - 1) { round =>
+      sums(if (round.index == 0) round.prev else normalize(round.prev, "x"), round.index)
+    }()
+    val auth = normalize(authSums, "a")
+    val hub = normalize(sums(auth.withColumnRenamed("a", "x"), 1).cut(), "h")
     nodes.join(hub, Seq("node"), "left").join(auth, Seq("node"), "left")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub_fx"),
         coalesce(col("a"), lit(0L)).as("auth_fx"))
@@ -317,8 +308,8 @@ object Rank {
     // D = 0 every round by construction — skip the per-round dangling
     // aggregation and broadcast entirely
     val hasDanglings = totals.getLong(1) > 0L
-    var r = nodes.select(col("node"), col("__dang"), lit(scale).as("r"))
-    for (_ <- 1 to iters) {
+    Lineage.iterate(nodes.select(col("node"), col("__dang"), lit(scale).as("r")), iters) { round =>
+      val r = round.prev
       val contrib = ed.join(r, ed("src") === r("node"))
         .select(ed("dst").as("node"), expr("r * w div wt").as("c"))
         .groupBy("node").agg(sum(col("c")).as("s"))
@@ -333,15 +324,10 @@ object Rank {
             .select(expr(s"dmass div ${n}L").as("dshare"))
           joined.crossJoin(broadcast(dshare))
         } else joined.withColumn("dshare", lit(0L))
-      val prev = r
-      r = withShare
+      withShare
         .select(col("node"), col("__dang"),
           expr(s"(${100 - dampingPct} * ${scale}L + $dampingPct * (coalesce(s, 0L) + dshare)) div 100")
             .as("r"))
-        .cut()
-      // new rank frame materialized — free the superseded round's blocks
-      Lineage.free(prev)
-    }
-    r.select("node", "r")
+    }().select("node", "r")
   }
 }

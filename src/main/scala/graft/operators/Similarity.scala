@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.operators.Lineage.LineageOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.{dotProduct, l2Norm}
 
@@ -791,29 +791,29 @@ object Similarity {
         floor(lit(1000000.0) * dotProduct(col("va"), col("vb")) / (col("na") * col("nb")))
           .as("simc_ppm"))
       .cut()
-    var sel: DataFrame = null
-    for (r <- 1 to k) {
-      val scored =
-        if (sel == null)
-          cand.withColumn("mmr_ppm", expr(s"($lambdaPm * simq_ppm) div 1000"))
-        else {
-          val pen = pairs
-            .join(sel.select(col("query_id"), col("doc_id").as("db")), Seq("query_id", "db"))
-            .groupBy(col("query_id"), col("da").as("neighbor_id"))
-            .agg(max("simc_ppm").as("pen_ppm"))
-          cand.join(sel.select(col("query_id"), col("doc_id").as("neighbor_id")),
-              Seq("query_id", "neighbor_id"), "left_anti")
-            .join(pen, Seq("query_id", "neighbor_id"))
-            .withColumn("mmr_ppm",
-              expr(s"($lambdaPm * simq_ppm - ${1000 - lambdaPm} * pen_ppm) div 1000"))
-        }
-      val pick = scored.withColumn("__rn", row_number().over(
+    // each query's best-scored candidate, as its pick of rank `rank`
+    def pick(scored: DataFrame, rank: Long): DataFrame =
+      scored.withColumn("__rn", row_number().over(
           Window.partitionBy("query_id").orderBy(col("mmr_ppm").desc, col("neighbor_id").asc)))
         .filter(col("__rn") === 1)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          lit(r.toLong).as("mmr_rank"), col("mmr_ppm"))
-      sel = (if (sel == null) pick else sel.unionByName(pick)).cut()
-    }
+          lit(rank).as("mmr_rank"), col("mmr_ppm"))
+    // rank 1 has nothing selected to penalize against: pure relevance
+    val first = pick(cand.withColumn("mmr_ppm", expr(s"($lambdaPm * simq_ppm) div 1000")), 1L)
+      .cut()
+    val sel = Lineage.iterate(first, k - 1) { round =>
+      val sel = round.prev
+      val pen = pairs
+        .join(sel.select(col("query_id"), col("doc_id").as("db")), Seq("query_id", "db"))
+        .groupBy(col("query_id"), col("da").as("neighbor_id"))
+        .agg(max("simc_ppm").as("pen_ppm"))
+      val scored = cand.join(sel.select(col("query_id"), col("doc_id").as("neighbor_id")),
+          Seq("query_id", "neighbor_id"), "left_anti")
+        .join(pen, Seq("query_id", "neighbor_id"))
+        .withColumn("mmr_ppm",
+          expr(s"($lambdaPm * simq_ppm - ${1000 - lambdaPm} * pen_ppm) div 1000"))
+      sel.unionByName(pick(scored, round.index + 2L))
+    }()
     sel.select("query_id", "mmr_rank", "doc_id", "mmr_ppm")
   }
 
@@ -851,33 +851,28 @@ object Similarity {
     val base = withNorm(corpus, idCol, vecCol, "id", "v", "nrm").cut()
     val seedRow = base.orderBy(col("id").asc).limit(1)
       .select("id", "v", "nrm").head()
-    var picks = Seq((1L, seedRow.getLong(0), 0L))
+    val picks = Seq.newBuilder[(Long, Long, Long)]
+    picks += ((1L, seedRow.getLong(0), 0L))
     // the pick rides as a DOUBLE literal array (the C6 hyperplane
     // convention), so the kernel's float×double accumulation matches the
     // oracle's cast-to-double folds bit-for-bit
-    var pickVec: Seq[Double] = seedRow.getSeq[Float](1).map(_.toDouble)
-    var pickNorm = seedRow.getDouble(2)
-    var pickId = seedRow.getLong(0)
-    def distTo(vec: Seq[Double], nrm: Double): Column = {
-      val p = typedlit(vec)
+    def distTo(pick: Row): Column = {
+      val p = typedlit(pick.getSeq[Float](1).map(_.toDouble))
       (lit(1000000L) - floor(lit(1000000.0) *
-        dotProduct(col("v"), p) / (col("nrm") * lit(nrm))))
+        dotProduct(col("v"), p) / (col("nrm") * lit(pick.getDouble(2)))))
     }
-    var dmin = base.withColumn("dmin", distTo(pickVec, pickNorm))
-      .filter(col("id") =!= pickId)
+    val dmin0 = base.withColumn("dmin", distTo(seedRow))
+      .filter(col("id") =!= seedRow.getLong(0))
       .cut()
-    for (r <- 2L to k.toLong if !dmin.isEmpty) {
-      val next = dmin.orderBy(col("dmin").desc, col("id").asc).limit(1)
+    Lineage.iterate(dmin0, if (k > 1 && !dmin0.isEmpty) k - 1 else 0) { round =>
+      val dmin = round.prev
+      val far = dmin.orderBy(col("dmin").desc, col("id").asc).limit(1)
         .select("id", "v", "nrm", "dmin").head()
-      pickId = next.getLong(0)
-      pickVec = next.getSeq[Float](1).map(_.toDouble)
-      pickNorm = next.getDouble(2)
-      picks = picks :+ ((r, pickId, next.getLong(3)))
-      dmin = dmin.filter(col("id") =!= pickId)
-        .withColumn("dmin", least(col("dmin"), distTo(pickVec, pickNorm)))
-        .cut()
-    }
-    picks.toDF("rank", "vec_id", "radius_ppm")
+      picks += ((round.index + 2L, far.getLong(0), far.getLong(3)))
+      dmin.filter(col("id") =!= far.getLong(0))
+        .withColumn("dmin", least(col("dmin"), distTo(far)))
+    } { (_, next) => next.isEmpty }
+    picks.result().toDF("rank", "vec_id", "radius_ppm")
   }
 
   /** C130: Johnson–Lindenstrauss RANDOM-PROJECTION reduction — the

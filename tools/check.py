@@ -1,18 +1,28 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate.
 
-Usage: python3 tools/check.py [sfdir] [outdir]
+Usage: python3 tools/check.py [sfdir] [outdir] [prefixes]
 Runs graft.Verify via sbt, then each oracle SQL in DuckDB over the same
 parquet tables, and strictly compares (columns sorted by name, exact values).
+`prefixes` (comma-separated, e.g. q86,q87) limits both the dump and the
+compare to the queries whose names start with one of them.
 """
 import json, subprocess, sys, glob, os
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+PREFIXES = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def selected(name):
+    return PREFIXES is None or any(name.startswith(p) for p in PREFIXES)
+
 
 if os.environ.get("SKIP_VERIFY") != "1":
-    r = subprocess.run(["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-                       cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+    verify_args = [SF, OUT] + ([sys.argv[3]] if PREFIXES else [])
+    r = subprocess.run(["sbt", "-batch", "runMain graft.Verify " + " ".join(verify_args)],
+                       cwd=ROOT, capture_output=True, text=True, timeout=1800)
     if "[success]" not in r.stdout:
         print(r.stdout[-4000:]); print(r.stderr[-2000:]); sys.exit(1)
     # surface per-query failures printed by Verify
@@ -29,9 +39,13 @@ for f in glob.glob(f"{SF}/*.parquet"):
 oracle = json.load(open(f"{OUT}/oracle_sql.json"))
 ok = fail = 0
 for name, sql in sorted(oracle.items()):
+    if not selected(name):
+        continue
     pdir = f"{OUT}/{name}"
     if not os.path.isdir(pdir):
-        print(f"FAIL {name}: no spark output"); fail += 1; continue
+        failed = f"{OUT}/{name}.failed"
+        reason = open(failed).read().strip() if os.path.exists(failed) else "no spark output"
+        print(f"FAIL {name}: {reason}"); fail += 1; continue
     try:
         spark_df = pd.concat([pd.read_parquet(p) for p in sorted(glob.glob(f"{pdir}/*.parquet"))])
         duck_df = con.execute(sql).df()
@@ -73,9 +87,13 @@ for name, sql in sorted(oracle.items()):
 # rows-only check for queries without an oracle (non-SQL-expressible ops):
 # the dump must exist and be non-empty.
 rowsonly = 0
+for failed in sorted(glob.glob(f"{OUT}/*.failed")):
+    name = os.path.basename(failed)[:-len(".failed")]
+    if name not in oracle and selected(name):
+        print(f"FAIL {name}: {open(failed).read().strip()}"); fail += 1
 for pdir in sorted(glob.glob(f"{OUT}/q*")):
     name = os.path.basename(pdir)
-    if name in oracle or not os.path.isdir(pdir):
+    if name in oracle or not os.path.isdir(pdir) or not selected(name):
         continue
     try:
         n = sum(len(pd.read_parquet(p)) for p in glob.glob(f"{pdir}/*.parquet"))
