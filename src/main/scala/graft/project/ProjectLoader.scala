@@ -106,30 +106,35 @@ object ProjectLoader {
         case n: Long => n
         case s: String => s.toLong // quoted yaml numbers count too
       }
-      // routing (sync.ts:75-107): command/npm connections deliver through
-      // the stdio connector protocol (one process per partition); image
-      // connections do too WHEN a container runtime is supplied (the
-      // reference's docker channel); otherwise image/kind connections use
-      // the in-process Spark-native destination profile — graft's fast
-      // path for clusters without a container runtime on executors.
-      val sink: DataFrame => Unit = (commandFor(conn), conn.image, containerRuntime) match {
+      runner.run(spark, model, syncId,
+        sink = sinkFor(conn, sync, syncId, fullRefreshEff, transport, containerRuntime),
+        fullRefresh = fullRefreshEff,
+        enrich = enrich,
+        checkpointEvery = checkpointEvery)
+    }
+
+    /** The destination one sync delivers to (routing, sync.ts:75-107):
+      * command/npm connections deliver through the stdio connector
+      * protocol (one process per partition); image connections do too
+      * WHEN a container runtime is supplied (the reference's docker
+      * channel); otherwise image/kind connections use the in-process
+      * Spark-native destination profile — graft's fast path for clusters
+      * without a container runtime on executors. */
+    private def sinkFor(conn: ConnectionDef, sync: SyncDef, syncId: String,
+                        fullRefresh: Boolean, transport: RestSink.Transport,
+                        containerRuntime: Option[graft.sinks.ContainerRuntime]): DataFrame => Unit =
+      (commandFor(conn), conn.image, containerRuntime) match {
         case (Some(cmdDef), _, _) =>
-          val config = processSinkConfig(conn, sync, syncId, fullRefreshEff,
+          val config = processSinkConfig(conn, sync, syncId, fullRefresh,
             command = Some(cmdDef), image = None)
           df => { graft.sinks.ProcessSink.deliver(df, config); () }
         case (None, Some(img), Some(rt)) =>
-          val config = processSinkConfig(conn, sync, syncId, fullRefreshEff,
+          val config = processSinkConfig(conn, sync, syncId, fullRefresh,
             command = None, image = Some((img, rt)))
           df => { graft.sinks.ProcessSink.deliver(df, config); () }
         case _ =>
           df => { RestSink.push(df, transport, RestSink.Profiles.forDestination(conn.kind)); () }
       }
-      runner.run(spark, model, syncId,
-        sink = sink,
-        fullRefresh = fullRefreshEff,
-        enrich = enrich,
-        checkpointEvery = checkpointEvery)
-    }
 
     /** The (command vector, dir) a connection's connector runs as, or
       * None for image/in-process destinations. An explicit
@@ -192,17 +197,8 @@ object ProjectLoader {
       registerDatasource(spark, md.datasource)
       val model = Model.fromSql(md.id, md.sql, keyCols = md.keys,
         cursorCol = md.cursor, env = env)
-      val lastCursor =
-        if (fullRefresh) None
-        else store.get(Seq(s"syncId=$syncId", "$lastCursor"))
-      val increment = (model.buildIncremental, model.cursorCol, lastCursor) match {
-        case (Some(bi), _, Some(v)) => bi(spark, v)
-        case (None, Some(c), Some(v)) =>
-          val base = model.build(spark)
-          base.filter(org.apache.spark.sql.functions.col(c) >
-            org.apache.spark.sql.functions.lit(v).cast(base.schema(c).dataType))
-        case _ => model.build(spark)
-      }
+      val (lastCursor, increment) =
+        new SyncRunner(store).increment(spark, model, syncId, fullRefresh)
       val rows = increment.count()
       val profile = RestSink.Profiles.forDestination(conn.kind)
       SyncPlan(syncId, conn.kind, lastCursor, rows,
@@ -293,7 +289,9 @@ object ProjectLoader {
         .copy(validations = validations)
       new SyncRunner(store).runContinuous(
         model.build(spark), model, syncId, checkpointDir,
-        sink = df => { RestSink.push(df, transport, RestSink.Profiles.forDestination(conn.kind)); () },
+        // the stream checkpoint is the position, so a continuous run
+        // never asks its connector for a full refresh
+        sink = sinkFor(conn, sync, syncId, fullRefresh = false, transport, containerRuntime = None),
         enrich = enrichFor(syncId, sync, enrichProviders))
     }
 

@@ -6,6 +6,7 @@ import org.json4s._
 import graft.protocol.Messages._
 import graft.protocol.{StateRpc, StdioConnector}
 import graft.state.StateStore
+import graft.sync.ErrorThreshold
 
 /**
  * Process-connector destination: delivers a DataFrame to an external
@@ -52,8 +53,6 @@ object ProcessSink {
       connectionCredentials: String = "{}", // JSON text; JValue is not stable across serialization
       streamOptions: String = "{}",
       fullRefresh: Boolean = false,
-      errorRatioLimit: Double = 0.2,
-      errorMinRows: Long = 100,
       replyTimeoutMs: Long = 60000,
       image: Option[String] = None,
       runtime: ContainerRuntime = ContainerRuntime()) {
@@ -153,10 +152,7 @@ object ProcessSink {
     }
 
     val total = Status(received.value, success.value, skipped.value, failed.value)
-    if (total.received >= config.errorMinRows &&
-        total.failed.toDouble / math.max(1L, total.received) >= config.errorRatioLimit)
-      throw new IllegalStateException(
-        s"error threshold exceeded: ${total.failed}/${total.received} failed")
+    ErrorThreshold().check(total.received - total.failed, total.failed)
     total
   }
 

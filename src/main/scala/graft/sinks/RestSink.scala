@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import scala.collection.mutable.ArrayBuffer
+import graft.sync.ErrorThreshold
 
 /**
  * B13 — batched, rate-limited REST destination sink.
@@ -74,8 +75,6 @@ object RestSink {
       batchSize: Int = 1000,
       maxRetries: Int = 3,
       permitsPerSecond: Double = 0.0, // 0 = unlimited
-      errorRatioLimit: Double = 0.2,
-      errorMinRows: Long = 100,
       /** Upper bound on concurrent write tasks used as the rate divisor.
         * 0 = snapshot `defaultParallelism` at submit time — correct for
         * static clusters; under DYNAMIC allocation executors added
@@ -214,11 +213,7 @@ object RestSink {
     }
 
     val result = Result(sent.value, failed.value, batches.value, retries.value)
-    val total = result.sentRows + result.failedRows
-    if (total >= config.errorMinRows &&
-        result.failedRows.toDouble / total >= config.errorRatioLimit)
-      throw new IllegalStateException(
-        s"error threshold exceeded: ${result.failedRows}/$total failed")
+    ErrorThreshold().check(result.sentRows, result.failedRows)
     result
   }
 

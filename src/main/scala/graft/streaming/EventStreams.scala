@@ -320,8 +320,8 @@ object EventStreams {
   /** D39: continuously-maintained MARKOV ATTRIBUTION — the streaming
     * face of B53 (as D37 is of C147): [[journeyUpdates]] streams
     * journey transitions, each micro-batch's increments merge into the
-    * maintained ADDITIVE (src, dst, n) count state (batchId-versioned
-    * dirs + pointer flip — the D12 exactly-once discipline), and every
+    * maintained ADDITIVE (src, dst, n) count state (exactly once via
+    * [[versioned]]), and every
     * version re-prices `Attribution.markovAttributionFromCounts` from
     * state alone — the SAME kernel the one-shot q236 runs, so
     * "attribution from maintained state" equals "attribution from the
@@ -331,42 +331,32 @@ object EventStreams {
                                checkpointDir: String,
                                watermark: String = "30 minutes",
                                quietMs: Long = 30 * 60 * 1000L): Unit = {
-    val q = journeyUpdates(events, convChannel, watermark, quietMs).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
+    val journeys = journeyUpdates(events, convChannel, watermark, quietMs)
+    runToSink(journeys, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
         import spark.implicits._
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          ()
-        } else {
-          val fresh = batch.toDF().groupBy("src", "dst").agg(count(lit(1)).as("n"))
-          val merged = prev match {
-            case Some(p) => fresh
-              .join(spark.read.parquet(p)
-                .select(col("src"), col("dst"), col("n").as("pn")),
-                Seq("src", "dst"), "full_outer")
-              .select(col("src"), col("dst"),
-                (coalesce(col("n"), lit(0L)) + coalesce(col("pn"), lit(0L))).as("n"))
-            case None => fresh
-          }
-          merged.write.mode("overwrite").parquet(target)
-          graft.operators.Attribution.markovAttributionFromCounts(spark,
-              spark.read.parquet(target).as[(String, String, Long)].collect().toSeq)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
-          writePointer(spark, stateRoot, batchId, target)
+        val fresh = batch.groupBy("src", "dst").agg(count(lit(1)).as("n"))
+        val merged = prev match {
+          case Some(p) => fresh
+            .join(spark.read.parquet(p)
+              .select(col("src"), col("dst"), col("n").as("pn")),
+              Seq("src", "dst"), "full_outer")
+            .select(col("src"), col("dst"),
+              (coalesce(col("n"), lit(0L)) + coalesce(col("pn"), lit(0L))).as("n"))
+          case None => fresh
         }
+        merged.write.mode("overwrite").parquet(target)
+        graft.operators.Attribution.markovAttributionFromCounts(spark,
+            spark.read.parquet(target).as[(String, String, Long)].collect().toSeq)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Current maintained transition counts of [[markovAttributionMonitor]]. */
   def markovState(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(readPointer(spark, stateRoot).get)
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** Versioned attribution history of [[markovAttributionMonitor]]. */
   def markovHistory(spark: SparkSession, reportRoot: String): DataFrame =
@@ -468,7 +458,7 @@ object EventStreams {
     * streams exactly-once WEIGHTED basket/item/pair increments (±1
     * rows — a capped basket retracts its prior contributions), each
     * micro-batch merges them into the maintained ADDITIVE count state
-    * (one (kind, a, b, n) frame, batchId-versioned + pointer flip;
+    * (one (kind, a, b, n) frame, exactly once via [[versioned]];
     * zeroed rows are dropped — for additive counts zero IS absence),
     * and every version re-ranks `Recommend.scoreFromCounts` from state
     * alone — the SAME kernel the one-shot q245 runs, so "recs from
@@ -481,48 +471,37 @@ object EventStreams {
                       stateRoot: String, reportRoot: String,
                       checkpointDir: String,
                       maxBasketSize: Long = 1024L): Unit = {
-    val q = basketUpdates(rows, basketCol, itemCol, tsCol,
-        maxBasketSize = maxBasketSize).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          ()
-        } else {
-          val fresh = batch.toDF().groupBy("kind", "a", "b").agg(sum(col("w")).as("n"))
-          val merged = (prev match {
-            case Some(p) => fresh
-              .join(spark.read.parquet(p)
-                .select(col("kind"), col("a"), col("b"), col("n").as("pn")),
-                Seq("kind", "a", "b"), "full_outer")
-              .select(col("kind"), col("a"), col("b"),
-                (coalesce(col("n"), lit(0L)) + coalesce(col("pn"), lit(0L))).as("n"))
-            case None => fresh
-          }).filter(col("n") =!= 0L)
-          merged.write.mode("overwrite").parquet(target)
-          val st = spark.read.parquet(target)
-          val pairs = st.filter(col("kind") === "pair")
-            .select(col("a").as("item"), col("b").as("rec"), col("n").as("n_ab"))
-          val items = st.filter(col("kind") === "item")
-            .select(col("a").as("it"), col("n").as("n_it"))
-          val n = st.filter(col("kind") === "basket")
-            .agg(coalesce(sum(col("n")), lit(0L)).as("n_baskets"))
-          graft.operators.Recommend.scoreFromCounts(pairs, items, n, minPair, k)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
-          writePointer(spark, stateRoot, batchId, target)
-        }
+    val updates = basketUpdates(rows, basketCol, itemCol, tsCol, maxBasketSize = maxBasketSize)
+    runToSink(updates, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val fresh = batch.groupBy("kind", "a", "b").agg(sum(col("w")).as("n"))
+        val merged = (prev match {
+          case Some(p) => fresh
+            .join(spark.read.parquet(p)
+              .select(col("kind"), col("a"), col("b"), col("n").as("pn")),
+              Seq("kind", "a", "b"), "full_outer")
+            .select(col("kind"), col("a"), col("b"),
+              (coalesce(col("n"), lit(0L)) + coalesce(col("pn"), lit(0L))).as("n"))
+          case None => fresh
+        }).filter(col("n") =!= 0L)
+        merged.write.mode("overwrite").parquet(target)
+        val st = spark.read.parquet(target)
+        val pairs = st.filter(col("kind") === "pair")
+          .select(col("a").as("item"), col("b").as("rec"), col("n").as("n_ab"))
+        val items = st.filter(col("kind") === "item")
+          .select(col("a").as("it"), col("n").as("n_it"))
+        val n = st.filter(col("kind") === "basket")
+          .agg(coalesce(sum(col("n")), lit(0L)).as("n_baskets"))
+        graft.operators.Recommend.scoreFromCounts(pairs, items, n, minPair, k)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Current maintained (kind, a, b, n) counts of [[itemRecsMonitor]]. */
   def itemRecsState(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(readPointer(spark, stateRoot).get)
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** Versioned recommendation history of [[itemRecsMonitor]]. */
   def itemRecsHistory(spark: SparkSession, reportRoot: String): DataFrame =
@@ -624,41 +603,25 @@ object EventStreams {
     * reads a few KB of state instead of rescanning raw events: the
     * mergeable-sketch answer to the lambda architecture, streaming and
     * batch sharing one state representation (graft.operators.Sketches).
-    *
-    * Consistency: state versions are batchId-addressed (`v<batchId>`) and
-    * a pointer file flips only after the new version is fully written; a
-    * replayed batch (crash between pointer flip and checkpoint commit)
-    * detects its own version at the pointer and SKIPS the merge, so the
-    * non-idempotent top-k counts are applied exactly once. */
+    * The non-idempotent top-k counts merge exactly once via [[versioned]]. */
   def sketchMaintenance(events: DataFrame, groupCol: String, valueCol: String,
                         stateRoot: String, checkpointDir: String,
                         lgK: Int = 12, maxItemsTracked: Int = 100000): Unit = {
-    val q = events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target)) {
-          () // replayed batch: already merged and published, nothing to do
-        } else {
-          val fresh = batch.groupBy(col(groupCol)).agg(
-            hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"),
-            expr(s"approx_top_k_accumulate($valueCol, $maxItemsTracked)").as("tk_state"))
-          val merged = prev match {
-            case Some(p) => spark.read.parquet(p).unionByName(fresh)
-              .groupBy(col(groupCol)).agg(
-                hll_union_agg(col("sketch")).as("sketch"),
-                expr(s"approx_top_k_combine(tk_state, $maxItemsTracked)").as("tk_state"))
-            case None => fresh
-          }
-          merged.write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(events, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val fresh = batch.groupBy(col(groupCol)).agg(
+          hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"),
+          expr(s"approx_top_k_accumulate($valueCol, $maxItemsTracked)").as("tk_state"))
+        val merged = prev match {
+          case Some(p) => spark.read.parquet(p).unionByName(fresh)
+            .groupBy(col(groupCol)).agg(
+              hll_union_agg(col("sketch")).as("sketch"),
+              expr(s"approx_top_k_combine(tk_state, $maxItemsTracked)").as("tk_state"))
+          case None => fresh
         }
+        merged.write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** D14: continuously-maintained EXACT aggregate state — the streaming
@@ -669,33 +632,20 @@ object EventStreams {
     * rescanning event history. Decimal sums are associative, so the
     * maintained state equals the one-shot aggregate bit-for-bit — the
     * spec pins that equality after multi-batch out-of-order ingestion.
-    *
-    * Same exactly-once discipline as D12: batchId-versioned state dirs,
-    * pointer flipped last, replayed batches self-detect and skip. */
+    * Exactly once via [[versioned]]. */
   def aggMaintenance(events: DataFrame, keys: Seq[String], valueCol: String,
                      stateRoot: String, checkpointDir: String): Unit = {
-    val q = events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target)) {
-          () // replayed batch: already merged and published
-        } else {
-          val fresh = graft.operators.IncrementalAgg.buildState(batch.toDF(), keys, valueCol)
-          val merged = prev match {
-            case Some(p) =>
-              graft.operators.IncrementalAgg.merge(keys, spark.read.parquet(p), fresh)
-            case None => fresh
-          }
-          merged.write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(events, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val fresh = graft.operators.IncrementalAgg.buildState(batch, keys, valueCol)
+        val merged = prev match {
+          case Some(p) =>
+            graft.operators.IncrementalAgg.merge(keys, spark.read.parquet(p), fresh)
+          case None => fresh
         }
+        merged.write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** D2 (declarative path): sessionization via Spark's NATIVE
@@ -725,51 +675,36 @@ object EventStreams {
     * deletion. The batch's effective timestamp is its max event ts.
     * Re-sending an unchanged row creates NO new version (the null-safe
     * payload compare sees through it), so at-least-once upstream delivery
-    * is harmless even across batches.
-    *
-    * Same exactly-once discipline as D12/D14: batchId-versioned state
-    * dirs, pointer flipped last, replayed batches self-detect and skip.
-    * Empty batches publish nothing (no pointer churn). */
+    * is harmless even across batches. Exactly once via [[versioned]]. */
   def scdMaintenance(changes: DataFrame, keys: Seq[String], tsCol: String,
                      stateRoot: String, checkpointDir: String): Unit = {
-    val q = changes.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          () // replayed (already merged and published) or nothing to fold
-        } else {
-          // latest change per key WITHIN the batch (callers must make ties
-          // on tsCol impossible per key — e.g. a change-log sequence ts)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keys.map(col): _*).orderBy(col(tsCol).desc)
-          val latest = batch.toDF().withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-          val eff = latest.agg(max(col(tsCol))).head().getTimestamp(0)
-          val cur = latest.drop(tsCol)
-          val hist = prev match {
-            case Some(p) => spark.read.parquet(p)
-            case None =>
-              // seed history in applyScd2's required column order
-              // (keys ++ payload ++ meta) — the incoming stream's own
-              // column order may interleave keys and payload
-              val payload = cur.columns.filterNot(keys.contains).toSeq
-              cur.select((keys ++ payload).map(col): _*).limit(0)
-                .withColumn("valid_from", lit(null).cast("timestamp"))
-                .withColumn("valid_to", lit(null).cast("timestamp"))
-                .withColumn("is_current", lit(true))
-          }
-          graft.operators.Scd
-            .applyScd2(hist, cur, keys, lit(eff), closeMissing = false)
-            .write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(changes, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        // latest change per key WITHIN the batch (callers must make ties
+        // on tsCol impossible per key — e.g. a change-log sequence ts)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(keys.map(col): _*).orderBy(col(tsCol).desc)
+        val latest = batch.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+        val eff = latest.agg(max(col(tsCol))).head().getTimestamp(0)
+        val cur = latest.drop(tsCol)
+        val hist = prev match {
+          case Some(p) => spark.read.parquet(p)
+          case None =>
+            // seed history in applyScd2's required column order
+            // (keys ++ payload ++ meta) — the incoming stream's own
+            // column order may interleave keys and payload
+            val payload = cur.columns.filterNot(keys.contains).toSeq
+            cur.select((keys ++ payload).map(col): _*).limit(0)
+              .withColumn("valid_from", lit(null).cast("timestamp"))
+              .withColumn("valid_to", lit(null).cast("timestamp"))
+              .withColumn("is_current", lit(true))
         }
+        graft.operators.Scd
+          .applyScd2(hist, cur, keys, lit(eff), closeMissing = false)
+          .write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** D18: continuous data-quality MONITORING — the streaming face of B30
@@ -784,18 +719,13 @@ object EventStreams {
                           local: Seq[graft.model.Expectations.TableLocal],
                           fks: Seq[graft.model.Expectations.RefIntegrity],
                           historyRoot: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.model.Expectations.report(batch.toDF(), local, fks)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
-        }
+    runToSink(stream, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        graft.model.Expectations.report(batch, local, fks)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The full expectations audit trail: one row per (batch, expectation). */
@@ -823,27 +753,22 @@ object EventStreams {
     require(thresholds.nonEmpty && thresholds == thresholds.sorted &&
       thresholds.distinct.size == thresholds.size,
       "thresholds: sorted, distinct, non-empty")
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val scored = graft.operators.TextAnalysis.scoreDocs(
-            batch.toDF(), weights, dims, scale, idCol, textCol)
-          val bucket = thresholds
-            .map(t => when(col("score") >= t, 1).otherwise(0))
-            .reduce(_ + _)
-          scored.withColumn("bucket", bucket)
-            .groupBy("bucket")
-            .agg(count(lit(1)).as("n_docs"),
-              sum(col("score")).as("score_sum"),
-              sum(when(col("predicted"), 1L).otherwise(0L)).as("n_predicted"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
-        }
+    runToSink(stream, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val scored = graft.operators.TextAnalysis.scoreDocs(
+          batch, weights, dims, scale, idCol, textCol)
+        val bucket = thresholds
+          .map(t => when(col("score") >= t, 1).otherwise(0))
+          .reduce(_ + _)
+        scored.withColumn("bucket", bucket)
+          .groupBy("bucket")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(col("score")).as("score_sum"),
+            sum(when(col("predicted"), 1L).otherwise(0L)).as("n_predicted"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The drift history: one row per (batch, threshold bucket). */
@@ -867,22 +792,16 @@ object EventStreams {
                      historyRoot: String, checkpointDir: String,
                      sliceCol: String, valueCol: String): Unit = {
     require(reference.nonEmpty, "reference distribution must be non-empty")
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val refDf = reference.toDF("v", "c")
-          graft.operators.Drift.ksVsReference(
-              batch.toDF(), refDf, col(sliceCol), col(valueCol))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
-        }
+    runToSink(stream, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val refDf = reference.toDF("v", "c")
+        graft.operators.Drift.ksVsReference(batch, refDf, col(sliceCol), col(valueCol))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The KS drift history: one row per (batch, slice). */
@@ -906,19 +825,13 @@ object EventStreams {
                  historyRoot: String, checkpointDir: String,
                  valueCol: String): Unit = {
     require(refCounts.nonEmpty, "reference bin counts must be non-empty")
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Drift.psiVsReference(
-              batch.toDF(), col(valueCol), refCounts, mn, mx, bins)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
-        }
+    runToSink(stream, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        graft.operators.Drift.psiVsReference(batch, col(valueCol), refCounts, mn, mx, bins)
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The PSI history: B rows per batch, total repeated per row. */
@@ -938,9 +851,8 @@ object EventStreams {
     *
     * Per batch: observations pre-aggregate to (series, t) points, the
     * windowed kernel advances every seen series' walk from the carried
-    * state, the carry-out unions with untouched series' state
-    * (batchId-versioned dirs + pointer flip — D12's exactly-once
-    * discipline; replayed batches self-detect and skip), and the history
+    * state, the carry-out unions with untouched series' state (exactly
+    * once via [[versioned]]), and the history
     * appends one row per seen series with the batch's peak excursions
     * and alarm flags. State = ONE row per monitored series; nothing
     * rescans event history.
@@ -951,38 +863,27 @@ object EventStreams {
   def cusumMonitor(stream: DataFrame, level: Long, threshold: Long,
                    stateRoot: String, historyRoot: String, checkpointDir: String,
                    seriesCol: String, timeCol: String, valueCol: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          () // replayed batch (already advanced and published) or no data
-        } else {
-          val pts = batch.groupBy(col(seriesCol).as("series"), col(timeCol).as("t"))
-            .agg(sum(col(valueCol)).as("x"))
-          val carried = prev.map(p => spark.read.parquet(p))
-          val advanced = graft.operators.Changepoint.cusumVsReference(
-            pts, col("series"), col("t"), col("x"), level, carried)
-          advanced.withColumn("batch_id", lit(batchId))
-            .withColumn("alarm_high", col("peak_high") >= threshold)
-            .withColumn("alarm_low", col("peak_low") >= threshold)
-            .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
-          val freshState = advanced.select(col("series"),
-            col("end_high").as("s_high"), col("end_low").as("s_low"))
-          val merged = carried match {
-            case Some(st) => st.join(freshState.select("series"), Seq("series"), "left_anti")
-              .unionByName(freshState)
-            case None => freshState
-          }
-          merged.write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(stream, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val pts = batch.groupBy(col(seriesCol).as("series"), col(timeCol).as("t"))
+          .agg(sum(col(valueCol)).as("x"))
+        val carried = prev.map(p => spark.read.parquet(p))
+        val advanced = graft.operators.Changepoint.cusumVsReference(
+          pts, col("series"), col("t"), col("x"), level, carried)
+        advanced.withColumn("batch_id", lit(batchId))
+          .withColumn("alarm_high", col("peak_high") >= threshold)
+          .withColumn("alarm_low", col("peak_low") >= threshold)
+          .write.mode("overwrite").parquet(s"$historyRoot/v$batchId")
+        val freshState = advanced.select(col("series"),
+          col("end_high").as("s_high"), col("end_low").as("s_low"))
+        val merged = carried match {
+          case Some(st) => st.join(freshState.select("series"), Seq("series"), "left_anti")
+            .unionByName(freshState)
+          case None => freshState
         }
+        merged.write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The CUSUM history: one row per (batch, series). */
@@ -991,10 +892,7 @@ object EventStreams {
 
   /** The current CUSUM walk state: one row per monitored series. */
   def cusumState(spark: SparkSession, stateRoot: String): DataFrame =
-    readPointer(spark, stateRoot) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.emptyDataFrame
-    }
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** D31: INCREMENTAL identity resolution — the streaming face of
     * C118/C119 and how contact dedup actually runs in a reverse-ETL
@@ -1014,10 +912,8 @@ object EventStreams {
     *    than retro-rewriting history — the standard late-merge ledger:
     *    readers fold the ledger when they need the fully-merged view.
     *
-    * Exactly-once: record slices, assignment slices, and merge slices
-    * are batchId-versioned with [[dedupIngest]]'s done-marker-LAST
-    * discipline (a replayed batch skips; a crash re-runs against only
-    * PRIOR slices and overwrites idempotently). Per-ingest cost is
+    * Record, assignment and merge slices are applied exactly once via
+    * [[oncePerBatch]]. Per-ingest cost is
     * blocked-probe-join-sized — independent of how many batches came
     * before (the store grows, but the probe is block-partitioned; at
     * scale, compact the record slices bucketed by block key so the
@@ -1029,73 +925,57 @@ object EventStreams {
                     checkpointDir: String, idCol: String,
                     blockCols: Seq[String], fields: Seq[(String, Long, Long)],
                     matchThreshold: Long): Unit = {
-    val q = records.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(stateRoot)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(s"$stateRoot/_done_v$batchId")
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val root = new org.apache.hadoop.fs.Path(s"$stateRoot/records")
-          val priorDirs =
-            if (!fs.exists(root)) Seq.empty[String]
-            else fs.listStatus(root).toSeq
-              .filter(st => st.isDirectory && st.getPath.getName != s"v$batchId")
-              .map(_.getPath.toString)
-          val b = batch.toDF()
-          val cFields = fields.map { case (n, a, d) => (col(n), a, d) }
-          val cBlocks = blockCols.map(col)
-          // candidate entities from the stored records (empty on batch 0)
-          val cand = if (priorDirs.nonEmpty) {
-            val prior = spark.read.parquet(priorDirs: _*)
-            graft.operators.Linkage.scoreAgainst(b, prior, col(idCol),
-                cBlocks, cFields, matchThreshold, matchThreshold)
-              .join(prior.select(col(idCol).as("id_index"), col("entity_id")), "id_index")
-              .select(col("id_probe").as("rec"), col("entity_id").as("cand"))
-              .distinct()
-          } else b.sparkSession.emptyDataFrame
-            .select(lit(null).cast(b.schema(idCol).dataType).as("rec"),
-              lit(null).cast(b.schema(idCol).dataType).as("cand")).limit(0)
-          // within-batch clusters (match-grade links, transitive closure);
-          // the C26 label IS the min member id — the mint id
-          val within = graft.operators.Linkage.scorePairs(b, col(idCol),
-            cBlocks, cFields, matchThreshold, matchThreshold)
-          val clusters = graft.operators.Dedup
-            .resolveClusters(within, "id_a", "id_b")
-            .select(col("doc_id").as("rec"), col("cluster_id"))
-          val labeled = b.select(col(idCol).as("rec"))
-            .join(clusters, Seq("rec"), "left")
-            .withColumn("cluster_id", coalesce(col("cluster_id"), col("rec")))
-            .join(cand, Seq("rec"), "left")
-          // one entity per cluster: smallest matched existing entity,
-          // else the mint (cluster label)
-          val perCluster = labeled.groupBy("cluster_id")
-            .agg(min(col("cand")).as("adopted"))
-            .withColumn("entity_id", coalesce(col("adopted"), col("cluster_id")))
-          // labeled carries one row per (record, candidate entity) — a
-          // bridging record has several; the assignment is per RECORD
-          val assigned = labeled.select(col("rec"), col("cluster_id")).distinct()
-            .join(perCluster.select("cluster_id", "entity_id"), "cluster_id")
-            .select(col("rec").as(idCol), col("entity_id"))
-          // merge ledger: every OTHER matched entity of the cluster folds
-          // into the adopted one
-          val merges = labeled.join(perCluster.select("cluster_id", "entity_id"), "cluster_id")
-            .filter(col("cand").isNotNull && col("cand") =!= col("entity_id"))
-            .select(col("entity_id").as("entity_kept"), col("cand").as("entity_merged"))
+    runToSink(records, checkpointDir) { (b, batchId) =>
+      oncePerBatch(b, batchId, stateRoot) { (spark, priorSlices) =>
+        val priorDirs = priorSlices("records")
+        val cFields = fields.map { case (n, a, d) => (col(n), a, d) }
+        val cBlocks = blockCols.map(col)
+        // candidate entities from the stored records (empty on batch 0)
+        val cand = if (priorDirs.nonEmpty) {
+          val prior = spark.read.parquet(priorDirs: _*)
+          graft.operators.Linkage.scoreAgainst(b, prior, col(idCol),
+              cBlocks, cFields, matchThreshold, matchThreshold)
+            .join(prior.select(col(idCol).as("id_index"), col("entity_id")), "id_index")
+            .select(col("id_probe").as("rec"), col("entity_id").as("cand"))
             .distinct()
-          assigned.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$outRoot/assign/v$batchId")
-          merges.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$outRoot/merge/v$batchId")
-          b.join(assigned, idCol)
-            .write.mode("overwrite").parquet(s"$stateRoot/records/v$batchId")
-          fs.create(marker, true).close() // publish: batch fully applied
-        }
+        } else spark.emptyDataFrame
+          .select(lit(null).cast(b.schema(idCol).dataType).as("rec"),
+            lit(null).cast(b.schema(idCol).dataType).as("cand")).limit(0)
+        // within-batch clusters (match-grade links, transitive closure);
+        // the C26 label IS the min member id — the mint id
+        val within = graft.operators.Linkage.scorePairs(b, col(idCol),
+          cBlocks, cFields, matchThreshold, matchThreshold)
+        val clusters = graft.operators.Dedup
+          .resolveClusters(within, "id_a", "id_b")
+          .select(col("doc_id").as("rec"), col("cluster_id"))
+        val labeled = b.select(col(idCol).as("rec"))
+          .join(clusters, Seq("rec"), "left")
+          .withColumn("cluster_id", coalesce(col("cluster_id"), col("rec")))
+          .join(cand, Seq("rec"), "left")
+        // one entity per cluster: smallest matched existing entity,
+        // else the mint (cluster label)
+        val perCluster = labeled.groupBy("cluster_id")
+          .agg(min(col("cand")).as("adopted"))
+          .withColumn("entity_id", coalesce(col("adopted"), col("cluster_id")))
+        // labeled carries one row per (record, candidate entity) — a
+        // bridging record has several; the assignment is per RECORD
+        val assigned = labeled.select(col("rec"), col("cluster_id")).distinct()
+          .join(perCluster.select("cluster_id", "entity_id"), "cluster_id")
+          .select(col("rec").as(idCol), col("entity_id"))
+        // merge ledger: every OTHER matched entity of the cluster folds
+        // into the adopted one
+        val merges = labeled.join(perCluster.select("cluster_id", "entity_id"), "cluster_id")
+          .filter(col("cand").isNotNull && col("cand") =!= col("entity_id"))
+          .select(col("entity_id").as("entity_kept"), col("cand").as("entity_merged"))
+          .distinct()
+        assigned.withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$outRoot/assign/v$batchId")
+        merges.withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$outRoot/merge/v$batchId")
+        b.join(assigned, idCol)
+          .write.mode("overwrite").parquet(s"$stateRoot/records/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** All resolved records so far: the stored rows + their entity ids. */
@@ -1112,31 +992,23 @@ object EventStreams {
 
   /** Current SCD2 history under the latest published pointer. */
   def scdHistory(spark: SparkSession, stateRoot: String): DataFrame =
-    readPointer(spark, stateRoot) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.emptyDataFrame
-    }
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** Read the maintained aggregate state out as user-facing values
     * (n_rows / total / min / max / derived avg) — one row per group. */
   def aggReadout(spark: SparkSession, stateRoot: String, keys: Seq[String]): DataFrame =
-    readPointer(spark, stateRoot) match {
-      case Some(p) => graft.operators.IncrementalAgg.readout(spark.read.parquet(p), keys)
-      case None => spark.emptyDataFrame
-    }
+    graft.operators.IncrementalAgg.readout(
+      spark.read.parquet(publishedVersion(spark, stateRoot)), keys)
 
   /** Read the current sketch state as estimates: (group, approx_distinct,
     * top items by estimated count). Reads KBs, never the raw events. */
-  def sketchEstimates(spark: SparkSession, stateRoot: String, k: Int = 10): DataFrame =
-    readPointer(spark, stateRoot) match {
-      case Some(p) =>
-        val st = spark.read.parquet(p)
-        st.select(st.columns.head, "sketch", "tk_state")
-          .withColumn("approx_distinct", hll_sketch_estimate(col("sketch")))
-          .withColumn("top_items", expr(s"approx_top_k_estimate(tk_state, $k)"))
-          .drop("sketch", "tk_state")
-      case None => spark.emptyDataFrame
-    }
+  def sketchEstimates(spark: SparkSession, stateRoot: String, k: Int = 10): DataFrame = {
+    val st = spark.read.parquet(publishedVersion(spark, stateRoot))
+    st.select(st.columns.head, "sketch", "tk_state")
+      .withColumn("approx_distinct", hll_sketch_estimate(col("sketch")))
+      .withColumn("top_items", expr(s"approx_top_k_estimate(tk_state, $k)"))
+      .drop("sketch", "tk_state")
+  }
 
   /** Pointer files are batchId-VERSIONED (`_latest_v<batchId>`) and each new
     * version lands under a fresh name via tmp-write + rename, so there is
@@ -1186,6 +1058,76 @@ object EventStreams {
     }
   }
 
+  /** The state version a readout reads: the one the latest pointer
+    * names. A readout before any batch has published fails loudly,
+    * naming the root, rather than answering from nothing. */
+  private def publishedVersion(spark: SparkSession, stateRoot: String): String =
+    readPointer(spark, stateRoot)
+      .getOrElse(throw new IllegalStateException(s"no published state under $stateRoot"))
+
+  /** The POINTER-FLIP exactly-once step (D12) for an operator whose state
+    * is one batchId-versioned frame under `stateRoot`. The body gets the
+    * published version it merges from (`prev`, None before the first
+    * batch) and the directory to write this batch's version to
+    * (`target` = `stateRoot/v<batchId>`); anything else it writes must be
+    * batchId-addressed and overwrite-idempotent. Then:
+    *
+    *  - replay skip: a batch whose own version is already published
+    *    (crash between the pointer flip and the checkpoint commit) runs
+    *    nothing, so non-idempotent merges apply exactly once;
+    *  - empty skip: a batch with no rows runs nothing and publishes
+    *    nothing (no pointer churn, no empty version);
+    *  - publish last: the pointer flips to `target` only after the body
+    *    returns, so a crash mid-body leaves the previous version
+    *    readable and the replayed batch redoes its work from it. */
+  private def versioned(batch: DataFrame, batchId: Long, stateRoot: String)
+                       (body: (SparkSession, Option[String], String) => Unit): Unit = {
+    val spark = batch.sparkSession
+    val target = s"$stateRoot/v$batchId"
+    val prev = readPointer(spark, stateRoot)
+    if (!prev.contains(target) && !batch.isEmpty) {
+      body(spark, prev, target)
+      writePointer(spark, stateRoot, batchId, target)
+    }
+  }
+
+  /** The DONE-MARKER exactly-once step (D13) for an operator that appends
+    * one batchId-versioned slice per batch (`root/<sub>/v<batchId>`)
+    * instead of replacing one state frame. The body gets `priorSlices(sub)`:
+    * the slice dirs under `root/<sub>` written by EARLIER batches — never
+    * this batch's own `v<batchId>`, which a crashed earlier attempt may
+    * have half-written (probing it would match the batch against
+    * itself). Everything the body writes must be batchId-addressed and
+    * overwrite-idempotent. Then:
+    *
+    *  - replay skip: a batch whose `root/_done_v<batchId>` marker exists
+    *    runs nothing;
+    *  - empty skip: a batch with no rows runs nothing and writes no
+    *    marker;
+    *  - publish last: the marker is written only after the body returns,
+    *    so a crash mid-body re-runs the whole batch against prior slices
+    *    only. */
+  private def oncePerBatch(batch: DataFrame, batchId: Long, root: String)
+                          (body: (SparkSession, String => Seq[String]) => Unit): Unit = {
+    val spark = batch.sparkSession
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(s"$root/_done_v$batchId")
+    if (!fs.exists(marker) && !batch.isEmpty) {
+      def priorSlices(sub: String): Seq[String] = {
+        val dir = new org.apache.hadoop.fs.Path(s"$root/$sub")
+        if (!fs.exists(dir)) Seq.empty
+        else fs.listStatus(dir).toSeq
+          .filter { st =>
+            val name = st.getPath.getName
+            st.isDirectory && name.startsWith("v") && name != s"v$batchId"
+          }
+          .map(_.getPath.toString)
+      }
+      body(spark, priorSlices)
+      fs.create(marker, true).close()
+    }
+  }
+
   /** D13: continuous ingestion DEDUP — the streaming form of the C27
     * incremental near-dup loop: every micro-batch of documents (a) probes
     * the persisted band index for near-dups against EVERYTHING already
@@ -1194,10 +1136,8 @@ object EventStreams {
     * batches dedupe against it. Matches land in `matchesDir` as
     * (new_id, corpus_id, jaccard) parquet.
     *
-    * Exactly-once: index slices and match outputs are batchId-versioned
-    * directories with a done-marker written LAST; a replayed batch sees
-    * its marker and skips — same discipline as [[sketchMaintenance]].
-    * Within-batch duplicates are not this operator's job (run the batch
+    * Index slices and match outputs are applied exactly once via
+    * [[oncePerBatch]]. Within-batch duplicates are not this operator's job (run the batch
     * self-dedup inside the batch if needed); ACROSS batches every dup is
     * caught no matter how far apart the batches are.
     *
@@ -1210,44 +1150,21 @@ object EventStreams {
     * corpus re-scan. */
   def dedupIngest(docs: DataFrame, indexRoot: String, matchesDir: String,
                   checkpointDir: String, threshold: Double = 0.7): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(indexRoot)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(s"$indexRoot/_done_v$batchId")
-        if (!fs.exists(marker)) {
-          // Index slices live under batchId-versioned subdirs. A replayed
-          // batch (crash after its slices were written but before the done
-          // marker) must NOT probe its own v<batchId> slice — it holds this
-          // batch's documents, and probing it would emit every within-batch
-          // near-dup pair as a spurious cross-batch match. List the slice
-          // dirs explicitly and exclude the current version.
-          def priorSlices(sub: String): Seq[String] = {
-            val root = new org.apache.hadoop.fs.Path(s"$indexRoot/$sub")
-            if (!fs.exists(root)) Seq.empty
-            else fs.listStatus(root).toSeq
-              .filter(st => st.isDirectory && st.getPath.getName != s"v$batchId")
-              .map(_.getPath.toString)
-          }
-          val bandDirs = priorSlices("bands")
-          if (bandDirs.nonEmpty) {
-            val idxBands = spark.read.parquet(bandDirs: _*)
-            val idxSets = spark.read.parquet(priorSlices("sets"): _*)
-            graft.operators.Dedup
-              .incrementalNearDup(batch.toDF(), idxBands, idxSets, threshold = threshold)
-              .write.mode("overwrite").parquet(s"$matchesDir/v$batchId")
-          }
-          val (newBands, newSets) = graft.operators.Dedup.bandIndex(batch.toDF())
-          newBands.write.mode("overwrite").parquet(s"$indexRoot/bands/v$batchId")
-          newSets.write.mode("overwrite").parquet(s"$indexRoot/sets/v$batchId")
-          fs.create(marker, true).close() // publish: batch fully applied
+    runToSink(docs, checkpointDir) { (batch, batchId) =>
+      oncePerBatch(batch, batchId, indexRoot) { (spark, priorSlices) =>
+        val bandDirs = priorSlices("bands")
+        if (bandDirs.nonEmpty) {
+          val idxBands = spark.read.parquet(bandDirs: _*)
+          val idxSets = spark.read.parquet(priorSlices("sets"): _*)
+          graft.operators.Dedup
+            .incrementalNearDup(batch, idxBands, idxSets, threshold = threshold)
+            .write.mode("overwrite").parquet(s"$matchesDir/v$batchId")
         }
+        val (newBands, newSets) = graft.operators.Dedup.bandIndex(batch)
+        newBands.write.mode("overwrite").parquet(s"$indexRoot/bands/v$batchId")
+        newSets.write.mode("overwrite").parquet(s"$indexRoot/sets/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** D28: continuous URL-FRONTIER dedup — the streaming face of C90
@@ -1260,12 +1177,8 @@ object EventStreams {
     * spelling of the same page, however many batches later, emits
     * nothing. The batch then appends its fresh keys to the seen set.
     *
-    * Exactly-once: frontier slices and seen-key slices are
-    * batchId-versioned with the done-marker-written-LAST discipline of
-    * [[dedupIngest]]; a replayed batch sees its marker and skips, and a
-    * crash between slices and marker re-runs against only PRIOR seen
-    * slices (its own half-written version is excluded), overwriting
-    * idempotently.
+    * Frontier and seen-key slices are applied exactly once via
+    * [[oncePerBatch]].
     *
     * Scale: the anti join probes the seen KEY set — canonical keys only,
     * a few percent of crawl-log bytes; at scale a periodic compaction
@@ -1274,43 +1187,26 @@ object EventStreams {
     * band index). */
   def urlFrontier(urls: DataFrame, seenRoot: String, outRoot: String,
                   checkpointDir: String, urlCol: String = "url"): Unit = {
-    val q = urls.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(seenRoot)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(s"$seenRoot/_done_v$batchId")
-        if (!fs.exists(marker)) {
-          val batchFirst = batch.toDF()
-            .withColumn("canonical_url",
-              graft.operators.Urls.canonicalize(col(urlCol)))
-            .groupBy("canonical_url")
-            .agg(min(col(urlCol)).as("url_example"), count(lit(1)).as("n_seen"))
-          val priorDirs = {
-            val root = new org.apache.hadoop.fs.Path(s"$seenRoot/keys")
-            if (!fs.exists(root)) Seq.empty[String]
-            else fs.listStatus(root).toSeq
-              .filter(st => st.isDirectory && st.getPath.getName != s"v$batchId")
-              .map(_.getPath.toString)
-          }
-          val fresh =
-            if (priorDirs.isEmpty) batchFirst
-            else batchFirst.join(spark.read.parquet(priorDirs: _*),
-              Seq("canonical_url"), "left_anti")
-          // the frontier write is the one computation (canonicalize +
-          // in-batch collapse + the seen-set anti join — the dominant
-          // cost as the seen set grows); the key slice re-reads it
-          // instead of running the probe a second time
-          fresh.write.mode("overwrite").parquet(s"$outRoot/v$batchId")
-          spark.read.parquet(s"$outRoot/v$batchId").select("canonical_url")
-            .write.mode("overwrite").parquet(s"$seenRoot/keys/v$batchId")
-          fs.create(marker, true).close() // publish: batch fully applied
-        }
+    runToSink(urls, checkpointDir) { (batch, batchId) =>
+      oncePerBatch(batch, batchId, seenRoot) { (spark, priorSlices) =>
+        val batchFirst = batch
+          .withColumn("canonical_url", graft.operators.Urls.canonicalize(col(urlCol)))
+          .groupBy("canonical_url")
+          .agg(min(col(urlCol)).as("url_example"), count(lit(1)).as("n_seen"))
+        val priorDirs = priorSlices("keys")
+        val fresh =
+          if (priorDirs.isEmpty) batchFirst
+          else batchFirst.join(spark.read.parquet(priorDirs: _*),
+            Seq("canonical_url"), "left_anti")
+        // the frontier write is the one computation (canonicalize +
+        // in-batch collapse + the seen-set anti join — the dominant
+        // cost as the seen set grows); the key slice re-reads it
+        // instead of running the probe a second time
+        fresh.write.mode("overwrite").parquet(s"$outRoot/v$batchId")
+        spark.read.parquet(s"$outRoot/v$batchId").select("canonical_url")
+          .write.mode("overwrite").parquet(s"$seenRoot/keys/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** D22: CONTINUOUS shard assignment — the streaming twin of C60
@@ -1324,34 +1220,21 @@ object EventStreams {
     * token_offset is the document's global token prefix — enough for a
     * writer to place every document without any further coordination.
     *
-    * State = ONE row (cumulative token count), batchId-versioned with
-    * the pointer-flip discipline of D12/D14; assignment slices are
-    * idempotent overwrites, so replays re-emit identical assignments and
-    * never advance the cumulative count twice. */
+    * State = ONE row (cumulative token count), advanced exactly once via
+    * [[versioned]]. */
   def shardAssign(docs: DataFrame, shardTokens: Long, stateRoot: String,
                   outRoot: String, checkpointDir: String,
                   idCol: String = "doc_id", tokCol: String = "n_tokens"): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          () // replayed (slice already written and published) or empty
-        } else {
-          val offset = prev.map(p => spark.read.parquet(p)
-            .select(col("cum_tokens")).head().getLong(0)).getOrElse(0L)
-          val placed = placeBatchOnAxis(batch.toDF(), offset, shardTokens, idCol, tokCol)
-          placed.write.mode("overwrite").parquet(s"$outRoot/v$batchId")
-          val newCum = offset + placed.agg(sum(col("n_tokens"))).head().getLong(0)
-          writeCumState(spark, target, newCum)
-          writePointer(spark, stateRoot, batchId, target)
-        }
+    runToSink(docs, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val offset = prev.map(p => spark.read.parquet(p)
+          .select(col("cum_tokens")).head().getLong(0)).getOrElse(0L)
+        val placed = placeBatchOnAxis(batch, offset, shardTokens, idCol, tokCol)
+        placed.write.mode("overwrite").parquet(s"$outRoot/v$batchId")
+        val newCum = offset + placed.agg(sum(col("n_tokens"))).head().getLong(0)
+        writeCumState(spark, target, newCum)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** D24: streaming token-budget BURN-DOWN monitor — the live third of
@@ -1366,9 +1249,7 @@ object EventStreams {
     * at the post-hoc audit. Domains absent from the plan report a NULL
     * allocation and flag over_budget from their first token.
     *
-    * State/replay discipline = D22's: state is batchId-versioned behind
-    * the pointer flip, a replayed batch sees its own version published
-    * and skips, so consumption never double-counts. Scale: per batch one
+    * Consumption is counted exactly once via [[versioned]]. Scale: per batch one
     * map-side-partial token count; state, plan and report are all
     * domain-frame-sized. */
   def budgetMonitor(docs: DataFrame, plan: Map[String, Long], stateRoot: String,
@@ -1378,51 +1259,40 @@ object EventStreams {
     val stateSchema = StructType(Seq(
       StructField("domain", StringType, nullable = true),
       StructField("consumed_tokens", LongType, nullable = false)))
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          () // replayed (state already published) or empty
-        } else {
-          val batchTok = batch.toDF()
-            .select(col(domainCol).as("domain"),
-              size(split(col(textCol), " ")).cast("long").as("__t"))
-            .groupBy("domain").agg(sum(col("__t")).as("batch_tokens"))
-          val prior = prev.map(p => spark.read.parquet(p))
-            .getOrElse(spark.createDataFrame(
-              java.util.List.of[org.apache.spark.sql.Row](), stateSchema))
-          val next = prior.select(col("domain"), col("consumed_tokens").as("__prior"))
-            .join(batchTok, Seq("domain"), "full_outer")
-            .select(col("domain"),
-              coalesce(col("batch_tokens"), lit(0L)).as("batch_tokens"),
-              (coalesce(col("__prior"), lit(0L)) +
-                coalesce(col("batch_tokens"), lit(0L))).as("consumed_tokens"))
-          import scala.jdk.CollectionConverters._
-          val planDf = spark.createDataFrame(
-            plan.toSeq.sortBy(_._1)
-              .map { case (d, a) => org.apache.spark.sql.Row(d, a) }.asJava,
-            StructType(Seq(
-              StructField("domain", StringType, nullable = true),
-              StructField("allocation", LongType, nullable = false))))
-          next.join(broadcast(planDf), Seq("domain"), "left_outer")
-            .select(col("domain"), col("batch_tokens"), col("consumed_tokens"),
-              col("allocation"),
-              (col("allocation") - col("consumed_tokens")).as("remaining"),
-              coalesce(col("consumed_tokens") > col("allocation"), lit(true))
-                .as("over_budget"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
-          next.select("domain", "consumed_tokens")
-            .write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
-        }
+    runToSink(docs, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val batchTok = batch
+          .select(col(domainCol).as("domain"),
+            size(split(col(textCol), " ")).cast("long").as("__t"))
+          .groupBy("domain").agg(sum(col("__t")).as("batch_tokens"))
+        val prior = prev.map(p => spark.read.parquet(p))
+          .getOrElse(spark.createDataFrame(
+            java.util.List.of[org.apache.spark.sql.Row](), stateSchema))
+        val next = prior.select(col("domain"), col("consumed_tokens").as("__prior"))
+          .join(batchTok, Seq("domain"), "full_outer")
+          .select(col("domain"),
+            coalesce(col("batch_tokens"), lit(0L)).as("batch_tokens"),
+            (coalesce(col("__prior"), lit(0L)) +
+              coalesce(col("batch_tokens"), lit(0L))).as("consumed_tokens"))
+        import scala.jdk.CollectionConverters._
+        val planDf = spark.createDataFrame(
+          plan.toSeq.sortBy(_._1)
+            .map { case (d, a) => org.apache.spark.sql.Row(d, a) }.asJava,
+          StructType(Seq(
+            StructField("domain", StringType, nullable = true),
+            StructField("allocation", LongType, nullable = false))))
+        next.join(broadcast(planDf), Seq("domain"), "left_outer")
+          .select(col("domain"), col("batch_tokens"), col("consumed_tokens"),
+            col("allocation"),
+            (col("allocation") - col("consumed_tokens")).as("remaining"),
+            coalesce(col("consumed_tokens") > col("allocation"), lit(true))
+              .as("over_budget"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
+        next.select("domain", "consumed_tokens")
+          .write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The burn-down audit trail: one row per (batch, domain). */
@@ -1439,60 +1309,44 @@ object EventStreams {
     * pointer-versioned view. Fact history is never re-joined; per batch
     * the work is one view scan + broadcast joins of delta/dim frames.
     *
-    * State = {view, dim snapshot} under one batchId version, published
-    * with the D22 pointer-flip — a replayed batch sees its version and
-    * skips, so the view never double-applies a delta. The dim snapshot
+    * State = {view, dim snapshot} under one batchId version, so the view
+    * applies each delta exactly once via [[versioned]]. The dim snapshot
     * rides the state (dims are broadcast-small by the B39 contract), so
     * dim drift between batches is detected without any dim changelog. */
   def enrichmentMaintain(facts: DataFrame, dimProvider: () => DataFrame,
                          stateRoot: String, checkpointDir: String,
                          factKey: String, dimKey: String,
                          tombstoneCol: String = "_deleted"): Unit = {
-    val q = facts.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          () // replayed (state already published) or empty
-        } else {
-          val dim = dimProvider()
-          val deletes = batch.toDF().filter(col(tombstoneCol)).select(col(factKey))
-          val upserts = batch.toDF().filter(!col(tombstoneCol)).drop(tombstoneCol)
-          val dimCols = dim.columns.filterNot(_ == dimKey)
-          val (oldView, oldDim) = prev match {
-            case Some(p) =>
-              (spark.read.parquet(s"$p/view"), spark.read.parquet(s"$p/dim"))
-            case None =>
-              val viewSchema = org.apache.spark.sql.types.StructType(
-                upserts.schema.fields ++
-                  dim.schema.fields.filter(_.name != dimKey).map(_.copy(nullable = true)))
-              (spark.createDataFrame(
-                java.util.List.of[org.apache.spark.sql.Row](), viewSchema),
-                spark.createDataFrame(
-                  java.util.List.of[org.apache.spark.sql.Row](), dim.schema))
-          }
-          val changedKeys = graft.operators.Diff
-            .snapshotDiff(dim, oldDim, Seq(dimKey)).select(dimKey)
-          val next = graft.operators.Diff.maintainJoin(
-            oldView, upserts, deletes, dim, changedKeys, factKey, dimKey)
-          next.write.mode("overwrite").parquet(s"$target/view")
-          dim.write.mode("overwrite").parquet(s"$target/dim")
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(facts, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val dim = dimProvider()
+        val deletes = batch.filter(col(tombstoneCol)).select(col(factKey))
+        val upserts = batch.filter(!col(tombstoneCol)).drop(tombstoneCol)
+        val (oldView, oldDim) = prev match {
+          case Some(p) =>
+            (spark.read.parquet(s"$p/view"), spark.read.parquet(s"$p/dim"))
+          case None =>
+            val viewSchema = org.apache.spark.sql.types.StructType(
+              upserts.schema.fields ++
+                dim.schema.fields.filter(_.name != dimKey).map(_.copy(nullable = true)))
+            (spark.createDataFrame(
+              java.util.List.of[org.apache.spark.sql.Row](), viewSchema),
+              spark.createDataFrame(
+                java.util.List.of[org.apache.spark.sql.Row](), dim.schema))
         }
+        val changedKeys = graft.operators.Diff
+          .snapshotDiff(dim, oldDim, Seq(dimKey)).select(dimKey)
+        val next = graft.operators.Diff.maintainJoin(
+          oldView, upserts, deletes, dim, changedKeys, factKey, dimKey)
+        next.write.mode("overwrite").parquet(s"$target/view")
+        dim.write.mode("overwrite").parquet(s"$target/dim")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
-  /** The current maintained enrichment view (empty before any batch). */
+  /** The current maintained enrichment view. */
   def enrichmentView(spark: SparkSession, stateRoot: String): DataFrame =
-    readPointer(spark, stateRoot) match {
-      case Some(p) => spark.read.parquet(s"$p/view")
-      case None => spark.emptyDataFrame
-    }
+    spark.read.parquet(s"${publishedVersion(spark, stateRoot)}/view")
 
   /** The C60 two-level hash-bucketed token-prefix placement of one batch
     * starting at global token `offset` — shared by [[shardAssign]] and
@@ -1545,11 +1399,9 @@ object EventStreams {
     * packed onto the monotone global token axis) → DESTINATION sink
     * (per-batch callback — a RestSink delivery profile in the spec).
     *
-    * One exactly-once discipline wraps the whole composition: everything
-    * a batch writes (rejects, matches, index slices, shard assignments,
-    * cum-token state) is batchId-versioned, the done-marker lands LAST,
-    * and a replayed batch that finds its marker skips every stage — the
-    * destination callback is at-least-once, same contract as
+    * [[oncePerBatch]] wraps the whole composition, so every stage runs
+    * once per batch; the destination callback is at-least-once, same
+    * contract as
     * [[graft.sync.SyncRunner.runContinuous]]. State read per batch is
     * one pointer + one 1-row cum count; index probe cost is the C27
     * contract (index bytes, not corpus bytes).
@@ -1563,71 +1415,54 @@ object EventStreams {
                    idCol: String = "doc_id", textCol: String = "text")
                   (sink: (DataFrame, Long) => Unit): Seq[CurationReport] = {
     val reports = scala.collection.mutable.ListBuffer.empty[CurationReport]
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(s"$root/_done_v$batchId")
-        if (!fs.exists(marker)) {
-          val df = batch.toDF().cut() // one source read
-          // B20: schema-driven validation; rejects are quarantined, not lost
-          val rules = graft.model.SchemaValidation.rules(docSchema)
-          val validCol = rules.map(_._2(df)).reduceOption(_ && _).getOrElse(lit(true))
-          val flagged = df.withColumn("__valid", validCol)
-          flagged.filter(!col("__valid")).drop("__valid")
-            .write.mode("overwrite").parquet(s"$root/rejects/v$batchId")
-          val valid = flagged.filter(col("__valid")).drop("__valid")
-          // D13: probe the index built by PRIOR batches (never the replayed
-          // own-version slice), record matches, drop the duplicates
-          def priorSlices(sub: String): Seq[String] = {
-            val p = new org.apache.hadoop.fs.Path(s"$root/index/$sub")
-            if (!fs.exists(p)) Seq.empty
-            else fs.listStatus(p).toSeq
-              .filter(st => st.isDirectory && st.getPath.getName != s"v$batchId")
-              .map(_.getPath.toString)
-          }
-          val bandDirs = priorSlices("bands")
-          val dupIds: DataFrame = if (bandDirs.isEmpty) valid.select(col(idCol)).limit(0)
-          else {
-            val matches = graft.operators.Dedup.incrementalNearDup(valid,
-              spark.read.parquet(bandDirs: _*), spark.read.parquet(priorSlices("sets"): _*),
-              textCol = textCol, idCol = idCol, threshold = threshold)
-            matches.write.mode("overwrite").parquet(s"$root/matches/v$batchId")
-            spark.read.parquet(s"$root/matches/v$batchId")
-              .select(col("new_id").as(idCol)).distinct()
-          }
-          val kept = valid.join(dupIds, Seq(idCol), "left_anti")
-            .cut()
-          // survivors (only) enter the index: later batches dedupe against
-          // the canonical copy, never against dropped duplicates
-          val (nb, ns) = graft.operators.Dedup.bandIndex(kept, textCol = textCol, idCol = idCol)
-          nb.write.mode("overwrite").parquet(s"$root/index/bands/v$batchId")
-          ns.write.mode("overwrite").parquet(s"$root/index/sets/v$batchId")
-          // D22: pack survivors onto the global token axis
-          val stateRoot = s"$root/state"
-          val prev = readPointer(spark, stateRoot)
-          val offset = prev.map(p => spark.read.parquet(p)
-            .select(col("cum_tokens")).head().getLong(0)).getOrElse(0L)
-          val withTok = kept.withColumn("__ntok",
-            size(graft.operators.TextOps.tokens(col(textCol))).cast("long"))
-          val placed = placeBatchOnAxis(withTok, offset, shardTokens, idCol, "__ntok")
-          placed.write.mode("overwrite").parquet(s"$root/shards/v$batchId")
-          val newCum = offset + spark.read.parquet(s"$root/shards/v$batchId")
-            .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
-          writeCumState(spark, s"$stateRoot/v$batchId", newCum)
-          writePointer(spark, stateRoot, batchId, s"$stateRoot/v$batchId")
-          // destination: curated rows + their placement, per-batch profile
-          sink(kept.join(spark.read.parquet(s"$root/shards/v$batchId"), idCol), batchId)
-          val Seq(nIn, nValid, nKept) = Seq(df, valid, kept).map(_.count())
-          reports += CurationReport(batchId, nIn, nIn - nValid, nValid - nKept, nKept)
-          fs.create(marker, true).close() // publish: batch fully applied
+    runToSink(docs, checkpointDir) { (batch, batchId) =>
+      oncePerBatch(batch, batchId, root) { (spark, priorSlices) =>
+        val df = batch.cut() // one source read
+        // B20: schema-driven validation; rejects are quarantined, not lost
+        val rules = graft.model.SchemaValidation.rules(docSchema)
+        val validCol = rules.map(_._2(df)).reduceOption(_ && _).getOrElse(lit(true))
+        val flagged = df.withColumn("__valid", validCol)
+        flagged.filter(!col("__valid")).drop("__valid")
+          .write.mode("overwrite").parquet(s"$root/rejects/v$batchId")
+        val valid = flagged.filter(col("__valid")).drop("__valid")
+        // D13: probe the index built by PRIOR batches, record matches,
+        // drop the duplicates
+        val bandDirs = priorSlices("index/bands")
+        val dupIds: DataFrame = if (bandDirs.isEmpty) valid.select(col(idCol)).limit(0)
+        else {
+          val matches = graft.operators.Dedup.incrementalNearDup(valid,
+            spark.read.parquet(bandDirs: _*), spark.read.parquet(priorSlices("index/sets"): _*),
+            textCol = textCol, idCol = idCol, threshold = threshold)
+          matches.write.mode("overwrite").parquet(s"$root/matches/v$batchId")
+          spark.read.parquet(s"$root/matches/v$batchId")
+            .select(col("new_id").as(idCol)).distinct()
         }
+        val kept = valid.join(dupIds, Seq(idCol), "left_anti")
+          .cut()
+        // survivors (only) enter the index: later batches dedupe against
+        // the canonical copy, never against dropped duplicates
+        val (nb, ns) = graft.operators.Dedup.bandIndex(kept, textCol = textCol, idCol = idCol)
+        nb.write.mode("overwrite").parquet(s"$root/index/bands/v$batchId")
+        ns.write.mode("overwrite").parquet(s"$root/index/sets/v$batchId")
+        // D22: pack survivors onto the global token axis
+        val stateRoot = s"$root/state"
+        val prev = readPointer(spark, stateRoot)
+        val offset = prev.map(p => spark.read.parquet(p)
+          .select(col("cum_tokens")).head().getLong(0)).getOrElse(0L)
+        val withTok = kept.withColumn("__ntok",
+          size(graft.operators.TextOps.tokens(col(textCol))).cast("long"))
+        val placed = placeBatchOnAxis(withTok, offset, shardTokens, idCol, "__ntok")
+        placed.write.mode("overwrite").parquet(s"$root/shards/v$batchId")
+        val newCum = offset + spark.read.parquet(s"$root/shards/v$batchId")
+          .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
+        writeCumState(spark, s"$stateRoot/v$batchId", newCum)
+        writePointer(spark, stateRoot, batchId, s"$stateRoot/v$batchId")
+        // destination: curated rows + their placement, per-batch profile
+        sink(kept.join(spark.read.parquet(s"$root/shards/v$batchId"), idCol), batchId)
+        val Seq(nIn, nValid, nKept) = Seq(df, valid, kept).map(_.count())
+        reports += CurationReport(batchId, nIn, nIn - nValid, nValid - nKept, nKept)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     reports.toSeq
   }
 
@@ -1638,7 +1473,19 @@ object EventStreams {
     * checkpoint + the sink's idempotence (upserts/audience diffs are
     * idempotent by construction; batchId lets non-idempotent sinks
     * dedupe). This is how a production continuous sync runs: the batch
-    * SyncRunner semantics, incrementally. */
+    * SyncRunner semantics, incrementally.
+    *
+    * It is also the ONE micro-batch runner: every foreachBatch query in
+    * graft (every maintained-state operator here and
+    * [[graft.sync.SyncRunner.runContinuous]]) starts here, in append mode
+    * with an AvailableNow trigger — process everything available, then
+    * stop; re-invocation resumes from `checkpointDir`. The runner adds
+    * no skip rules of its own: `sink` sees every batch, empty and
+    * replayed ones included. Operators that maintain state wrap their
+    * sink in one of the two exactly-once steps, [[versioned]] (one
+    * pointer-published state frame) or [[oncePerBatch]] (appended
+    * slices + a done-marker), which own the replay skip, the empty skip
+    * and publish-last. */
   def runToSink(transformed: DataFrame, checkpointDir: String)
                (sink: (DataFrame, Long) => Unit): Unit = {
     val q = transformed.writeStream
@@ -1666,41 +1513,28 @@ object EventStreams {
     *   groupBy(day).agg(max(peak), sum(starts), sum(ends)) over slices
     *     == the one-shot batch q158
     * (spec-pinned). State = ONE row (Σdelta so far = open sessions at
-    * the axis frontier), batchId-versioned behind the D22 pointer flip:
-    * a replayed batch sees its version published and skips, so the
-    * count never advances twice. */
+    * the axis frontier), advanced exactly once via [[versioned]]. */
   def concurrencyMonitor(boundaries: DataFrame, stateRoot: String,
                          outRoot: String, checkpointDir: String): Unit = {
-    val q = boundaries.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          ()
-        } else {
-          val carry = prev.map(p => spark.read.parquet(p)
-            .select(col("cum_tokens")).head().getLong(0)).getOrElse(0L)
-          val bounds = batch.toDF()
-            .select(col("t_us"), col("delta"), col("user_id"), col("session_seq"))
-          val slice = graft.operators.Sweep
-            .runningSum(bounds, expr("t_us div 86400000000L"),
-              Seq("t_us", "delta", "user_id", "session_seq"), "delta")
-            .withColumn("day", expr("t_us div 86400000000L"))
-            .groupBy("day")
-            .agg(max(col("running") + carry).as("peak_concurrency"),
-                 sum(when(col("delta") === 1L, 1L).otherwise(0L)).as("n_starts"),
-                 sum(when(col("delta") === -1L, 1L).otherwise(0L)).as("n_ends"))
-          slice.write.mode("overwrite").parquet(s"$outRoot/v$batchId")
-          val newCum = carry + bounds.agg(sum(col("delta"))).head().getLong(0)
-          writeCumState(spark, target, newCum)
-          writePointer(spark, stateRoot, batchId, target)
-        }
+    runToSink(boundaries, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val carry = prev.map(p => spark.read.parquet(p)
+          .select(col("cum_tokens")).head().getLong(0)).getOrElse(0L)
+        val bounds = batch
+          .select(col("t_us"), col("delta"), col("user_id"), col("session_seq"))
+        val slice = graft.operators.Sweep
+          .runningSum(bounds, expr("t_us div 86400000000L"),
+            Seq("t_us", "delta", "user_id", "session_seq"), "delta")
+          .withColumn("day", expr("t_us div 86400000000L"))
+          .groupBy("day")
+          .agg(max(col("running") + carry).as("peak_concurrency"),
+               sum(when(col("delta") === 1L, 1L).otherwise(0L)).as("n_starts"),
+               sum(when(col("delta") === -1L, 1L).otherwise(0L)).as("n_ends"))
+        slice.write.mode("overwrite").parquet(s"$outRoot/v$batchId")
+        val newCum = carry + bounds.agg(sum(col("delta"))).head().getLong(0)
+        writeCumState(spark, target, newCum)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** All concurrency slices emitted so far by [[concurrencyMonitor]]. */
@@ -1719,54 +1553,43 @@ object EventStreams {
     * spec-pinned: once the stream has delivered the whole current
     * period, the last batch's report equals the one-shot batch audit.
     * State and report are bin-frame-sized; per batch one map-side
-    * partial count — replay discipline = D22's pointer flip. */
+    * partial count; exactly once via [[versioned]]. */
   def driftMonitor(rows: DataFrame, refPpm: Map[Long, Long], binWidth: Double,
                    metricCol: String, stateRoot: String, reportRoot: String,
                    checkpointDir: String): Unit = {
-    val q = rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          ()
-        } else {
-          val binned = batch.toDF()
-            .select(floor(col(metricCol) / lit(binWidth)).cast("long").as("bin"))
-            .groupBy("bin").agg(count(lit(1)).as("batch_n"))
-          val prior = prev.map(p => spark.read.parquet(p))
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("bin",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("cum_n",
-                  org.apache.spark.sql.types.LongType, nullable = false)))))
-          val cum = binned.join(prior, Seq("bin"), "full_outer")
-            .select(col("bin"),
-              (coalesce(col("batch_n"), lit(0L)) + coalesce(col("cum_n"), lit(0L))).as("cum_n"),
-              coalesce(col("batch_n"), lit(0L)).as("batch_n"))
-          val ref = spark.createDataFrame(refPpm.toSeq).toDF("bin", "ref_ppm")
-          val report = cum
-            .join(broadcast(ref), Seq("bin"), "full_outer")
-            .na.fill(0L, Seq("cum_n", "batch_n", "ref_ppm"))
-            .crossJoin(broadcast(cum.agg(sum(col("cum_n")).as("__tot"))))
-            .select(col("bin"), col("batch_n"), col("cum_n"),
-              expr("cum_n * 1000000 div __tot").as("share_cum_ppm"), col("ref_ppm"))
-            .withColumn("gap_ppm", abs(col("share_cum_ppm") - col("ref_ppm")))
-          val tvd = report.agg(expr("sum(gap_ppm) div 2").as("tvd_ppm"))
-          report.crossJoin(broadcast(tvd))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
-          cum.select("bin", "cum_n")
-            .write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
-        }
+    runToSink(rows, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val binned = batch
+          .select(floor(col(metricCol) / lit(binWidth)).cast("long").as("bin"))
+          .groupBy("bin").agg(count(lit(1)).as("batch_n"))
+        val prior = prev.map(p => spark.read.parquet(p))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("bin",
+                org.apache.spark.sql.types.LongType, nullable = false),
+              org.apache.spark.sql.types.StructField("cum_n",
+                org.apache.spark.sql.types.LongType, nullable = false)))))
+        val cum = binned.join(prior, Seq("bin"), "full_outer")
+          .select(col("bin"),
+            (coalesce(col("batch_n"), lit(0L)) + coalesce(col("cum_n"), lit(0L))).as("cum_n"),
+            coalesce(col("batch_n"), lit(0L)).as("batch_n"))
+        val ref = spark.createDataFrame(refPpm.toSeq).toDF("bin", "ref_ppm")
+        val report = cum
+          .join(broadcast(ref), Seq("bin"), "full_outer")
+          .na.fill(0L, Seq("cum_n", "batch_n", "ref_ppm"))
+          .crossJoin(broadcast(cum.agg(sum(col("cum_n")).as("__tot"))))
+          .select(col("bin"), col("batch_n"), col("cum_n"),
+            expr("cum_n * 1000000 div __tot").as("share_cum_ppm"), col("ref_ppm"))
+          .withColumn("gap_ppm", abs(col("share_cum_ppm") - col("ref_ppm")))
+        val tvd = report.agg(expr("sum(gap_ppm) div 2").as("tvd_ppm"))
+        report.crossJoin(broadcast(tvd))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
+        cum.select("bin", "cum_n")
+          .write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Drift-report history of [[driftMonitor]], all batches. */
@@ -1783,48 +1606,28 @@ object EventStreams {
     * many batches apart the source and the copy arrive, at per-ingest
     * cost independent of corpus size (the C27 property).
     *
-    * Exactly-once via the D13 discipline: fingerprint slices and match
-    * outputs are batchId-versioned with a done-marker written LAST; a
-    * replayed batch sees its marker and skips, and a crash between
-    * slices and marker re-probes only PRIOR slices (its own
-    * half-written version excluded), overwriting idempotently. */
+    * Fingerprint slices and match outputs are applied exactly once via
+    * [[oncePerBatch]]. */
   def winnowIngest(docs: DataFrame, indexRoot: String, matchesDir: String,
                    checkpointDir: String, k: Int = 8, w: Int = 16,
                    minShared: Long = 3L): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(indexRoot)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(s"$indexRoot/_done_v$batchId")
-        if (!fs.exists(marker)) {
-          val fresh = graft.operators.Dedup
-            .winnowFingerprints(batch.toDF(), k, w)
-          val priorDirs = {
-            val root = new org.apache.hadoop.fs.Path(s"$indexRoot/fps")
-            if (!fs.exists(root)) Seq.empty[String]
-            else fs.listStatus(root).toSeq
-              .filter(st => st.isDirectory && st.getPath.getName != s"v$batchId")
-              .map(_.getPath.toString)
-          }
-          if (priorDirs.nonEmpty) {
-            val idx = spark.read.parquet(priorDirs: _*)
-              .select(col("id").as("corpus_id"), col("fp"))
-            fresh.select(col("id").as("new_id"), col("fp"))
-              .join(idx, "fp")
-              .groupBy("new_id", "corpus_id")
-              .agg(count(lit(1)).as("shared"))
-              .filter(col("shared") >= minShared)
-              .write.mode("overwrite").parquet(s"$matchesDir/v$batchId")
-          }
-          fresh.write.mode("overwrite").parquet(s"$indexRoot/fps/v$batchId")
-          fs.create(marker, true).close() // publish: batch fully applied
+    runToSink(docs, checkpointDir) { (batch, batchId) =>
+      oncePerBatch(batch, batchId, indexRoot) { (spark, priorSlices) =>
+        val fresh = graft.operators.Dedup.winnowFingerprints(batch, k, w)
+        val priorDirs = priorSlices("fps")
+        if (priorDirs.nonEmpty) {
+          val idx = spark.read.parquet(priorDirs: _*)
+            .select(col("id").as("corpus_id"), col("fp"))
+          fresh.select(col("id").as("new_id"), col("fp"))
+            .join(idx, "fp")
+            .groupBy("new_id", "corpus_id")
+            .agg(count(lit(1)).as("shared"))
+            .filter(col("shared") >= minShared)
+            .write.mode("overwrite").parquet(s"$matchesDir/v$batchId")
         }
+        fresh.write.mode("overwrite").parquet(s"$indexRoot/fps/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Excerpt matches found by [[winnowIngest]], all batches. */
@@ -1848,11 +1651,9 @@ object EventStreams {
     * (the C27/D13 ingest discipline) — df/total_tf/n_docs/l_total are
     * then additive across batches.
     *
-    * Exactly-once: the pointer flip is the publish for the WHOLE batch
-    * (postings slice + merged frames are written first, overwrite-
-    * idempotent); a replayed batch sees the pointer at its own version
-    * and skips, and [[bm25FromIndex]] reads only postings slices at or
-    * below the published version, so a crash-orphaned newer slice is
+    * Exactly once via [[versioned]], whose pointer flip publishes the
+    * postings slice too: [[bm25FromIndex]] reads only postings slices at
+    * or below the published version, so a crash-orphaned newer slice is
     * invisible until its batch replays and publishes.
     *
     * Scale: the per-batch merge shuffles batch-vocabulary keys against
@@ -1862,51 +1663,42 @@ object EventStreams {
     * the index side. */
   def indexMaintenance(docs: DataFrame, stateRoot: String, checkpointDir: String,
                        idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (!prev.contains(target)) {
-          val toks = batch.toDF()
-            .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
-            .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
-              explode(col("__toks")).as("term"))
-          val tf = toks.groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-          tf.write.mode("overwrite").parquet(s"$stateRoot/postings/v$batchId")
-          val termDelta = tf.groupBy("term").agg(
-            count(lit(1)).cast("long").as("df"), sum("tf").cast("long").as("total_tf"))
-          val statDelta = batch.toDF().agg(
-            count(lit(1)).cast("long").as("n_docs"),
-            sum(size(split(col(textCol), " "))).cast("long").as("l_total"))
-          val (terms, stats) = prev match {
-            case Some(p) => (
-              spark.read.parquet(s"$p/terms").unionByName(termDelta)
-                .groupBy("term").agg(sum("df").cast("long").as("df"),
-                  sum("total_tf").cast("long").as("total_tf")),
-              spark.read.parquet(s"$p/stats").unionByName(statDelta)
-                .agg(sum("n_docs").cast("long").as("n_docs"),
-                  sum("l_total").cast("long").as("l_total")))
-            case None => (termDelta, statDelta)
-          }
-          terms.write.mode("overwrite").parquet(s"$target/terms")
-          stats.write.mode("overwrite").parquet(s"$target/stats")
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(docs, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val toks = batch
+          .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__toks"))
+          .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
+            explode(col("__toks")).as("term"))
+        val tf = toks.groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
+        tf.write.mode("overwrite").parquet(s"$stateRoot/postings/v$batchId")
+        val termDelta = tf.groupBy("term").agg(
+          count(lit(1)).cast("long").as("df"), sum("tf").cast("long").as("total_tf"))
+        val statDelta = batch.agg(
+          count(lit(1)).cast("long").as("n_docs"),
+          sum(size(split(col(textCol), " "))).cast("long").as("l_total"))
+        val (terms, stats) = prev match {
+          case Some(p) => (
+            spark.read.parquet(s"$p/terms").unionByName(termDelta)
+              .groupBy("term").agg(sum("df").cast("long").as("df"),
+                sum("total_tf").cast("long").as("total_tf")),
+            spark.read.parquet(s"$p/stats").unionByName(statDelta)
+              .agg(sum("n_docs").cast("long").as("n_docs"),
+                sum("l_total").cast("long").as("l_total")))
+          case None => (termDelta, statDelta)
         }
+        terms.write.mode("overwrite").parquet(s"$target/terms")
+        stats.write.mode("overwrite").parquet(s"$target/stats")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Current merged term frame (term, df, total_tf) of [[indexMaintenance]]. */
   def indexTerms(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(s"${readPointer(spark, stateRoot).get}/terms")
+    spark.read.parquet(s"${publishedVersion(spark, stateRoot)}/terms")
 
   /** Current merged corpus scalars (n_docs, l_total) of [[indexMaintenance]]. */
   def indexStats(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(s"${readPointer(spark, stateRoot).get}/stats")
+    spark.read.parquet(s"${publishedVersion(spark, stateRoot)}/stats")
 
   /** D33: continuously-maintained KMV bottom-k sketches — the streaming
     * face of C127, and the set-operation upgrade over D12's HLL state:
@@ -1918,38 +1710,29 @@ object EventStreams {
     * under union, so each batch's kept rows union the persisted rows and
     * re-cut through `Sketches.kmvFromHashes` — the maintained sketch is
     * BIT-FOR-BIT the sketch of all data so far (the spec pins equality
-    * with the one-shot build after multi-batch ingest). Exactly-once via
-    * the D12 pointer-flip discipline. */
+    * with the one-shot build after multi-batch ingest). Exactly once via
+    * [[versioned]]. */
   def kmvMaintenance(rows: DataFrame, sliceCol: String, valueCol: String,
                      stateRoot: String, checkpointDir: String,
                      k: Int = 256): Unit = {
-    val q = rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (!prev.contains(target)) {
-          val fresh = graft.operators.Sketches
-            .kmvSketches(batch.toDF(), sliceCol, valueCol, k)
-            .select("slice", "hu")
-          val merged = prev match {
-            case Some(p) => graft.operators.Sketches.kmvFromHashes(
-              spark.read.parquet(p).select("slice", "hu").unionByName(fresh), k)
-            case None => graft.operators.Sketches.kmvFromHashes(fresh, k)
-          }
-          merged.write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(rows, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val fresh = graft.operators.Sketches
+          .kmvSketches(batch, sliceCol, valueCol, k)
+          .select("slice", "hu")
+        val merged = prev match {
+          case Some(p) => graft.operators.Sketches.kmvFromHashes(
+            spark.read.parquet(p).select("slice", "hu").unionByName(fresh), k)
+          case None => graft.operators.Sketches.kmvFromHashes(fresh, k)
         }
+        merged.write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Current maintained KMV sketch rows of [[kmvMaintenance]]. */
   def kmvState(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(readPointer(spark, stateRoot).get)
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** Pairwise set-operation estimates from the MAINTAINED sketches —
     * same kernel as the batch path (`Sketches.kmvPairs`). */
@@ -1971,43 +1754,29 @@ object EventStreams {
     * category-domain-sized cell frame ALONE — history is never
     * rescanned — and appends (batch_id, chi2_ppm, v2_ppm, …) as a
     * versioned dependence history whose V² trajectory is the alarm
-    * signal. Exactly-once via the D12/D29 pointer-flip discipline
-    * (report written idempotently under its version BEFORE the pointer
-    * flips; replayed batches skip on the pointer). */
+    * signal. Exactly once via [[versioned]]. */
   def dependenceMonitor(rows: DataFrame, xCol: String, yCol: String,
                         stateRoot: String, reportRoot: String,
                         checkpointDir: String): Unit = {
-    val q = rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          ()
-        } else {
-          val fresh = batch.toDF()
-            .select(col(xCol).cast("string").as("x"), col(yCol).cast("string").as("y"))
-            .groupBy("x", "y").agg(count(lit(1)).as("o"))
-          val merged = prev match {
-            case Some(p) => fresh
-              .join(spark.read.parquet(p).withColumnRenamed("o", "prev_o"),
-                Seq("x", "y"), "full_outer")
-              .select(col("x"), col("y"),
-                (coalesce(col("o"), lit(0L)) + coalesce(col("prev_o"), lit(0L))).as("o"))
-            case None => fresh
-          }
-          merged.write.mode("overwrite").parquet(target)
-          graft.operators.Dependence.chiSquareFromCells(
-              spark.read.parquet(target))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(rows, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val fresh = batch
+          .select(col(xCol).cast("string").as("x"), col(yCol).cast("string").as("y"))
+          .groupBy("x", "y").agg(count(lit(1)).as("o"))
+        val merged = prev match {
+          case Some(p) => fresh
+            .join(spark.read.parquet(p).withColumnRenamed("o", "prev_o"),
+              Seq("x", "y"), "full_outer")
+            .select(col("x"), col("y"),
+              (coalesce(col("o"), lit(0L)) + coalesce(col("prev_o"), lit(0L))).as("o"))
+          case None => fresh
         }
+        merged.write.mode("overwrite").parquet(target)
+        graft.operators.Dependence.chiSquareFromCells(spark.read.parquet(target))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** D37: continuously-maintained RANKING-QUALITY (ROC-AUC) monitor —
@@ -2019,51 +1788,39 @@ object EventStreams {
     * version re-prices [[graft.operators.Evaluation.rocAucFromCounts]]
     * from that value-domain-sized frame alone — history never
     * rescanned — appending a versioned (auc_ppm, gini_ppm) history
-    * whose downward drift is the retrain signal. Pointer-flip
-    * exactly-once. */
+    * whose downward drift is the retrain signal. Exactly once via
+    * [[versioned]]. */
   def aucMonitor(rows: DataFrame, labelCol: String, scoreCol: String,
                  stateRoot: String, reportRoot: String,
                  checkpointDir: String): Unit = {
-    val q = rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          ()
-        } else {
-          val fresh = batch.toDF()
-            .select(col(scoreCol).cast("long").as("s"),
-              when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("pos"))
-            .groupBy("s")
-            .agg(sum(col("pos")).as("np"), sum(lit(1L) - col("pos")).as("nn"))
-          val merged = prev match {
-            case Some(p) => fresh
-              .join(spark.read.parquet(p)
-                .select(col("s"), col("np").as("pnp"), col("nn").as("pnn")),
-                Seq("s"), "full_outer")
-              .select(col("s"),
-                (coalesce(col("np"), lit(0L)) + coalesce(col("pnp"), lit(0L))).as("np"),
-                (coalesce(col("nn"), lit(0L)) + coalesce(col("pnn"), lit(0L))).as("nn"))
-            case None => fresh
-          }
-          merged.write.mode("overwrite").parquet(target)
-          graft.operators.Evaluation.rocAucFromCounts(
-              spark.read.parquet(target))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(rows, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val fresh = batch
+          .select(col(scoreCol).cast("long").as("s"),
+            when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("pos"))
+          .groupBy("s")
+          .agg(sum(col("pos")).as("np"), sum(lit(1L) - col("pos")).as("nn"))
+        val merged = prev match {
+          case Some(p) => fresh
+            .join(spark.read.parquet(p)
+              .select(col("s"), col("np").as("pnp"), col("nn").as("pnn")),
+              Seq("s"), "full_outer")
+            .select(col("s"),
+              (coalesce(col("np"), lit(0L)) + coalesce(col("pnp"), lit(0L))).as("np"),
+              (coalesce(col("nn"), lit(0L)) + coalesce(col("pnn"), lit(0L))).as("nn"))
+          case None => fresh
         }
+        merged.write.mode("overwrite").parquet(target)
+        graft.operators.Evaluation.rocAucFromCounts(spark.read.parquet(target))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Current maintained per-score counts of [[aucMonitor]]. */
   def aucState(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(readPointer(spark, stateRoot).get)
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** Versioned AUC history of [[aucMonitor]], all batches. */
   def aucHistory(spark: SparkSession, reportRoot: String): DataFrame =
@@ -2082,61 +1839,50 @@ object EventStreams {
     * Contract: the stream delivers COMPLETE (series, t, v) bucket
     * points in time order per series (the D30 grain discipline);
     * points at or before the carried t are LATE and dropped (counted
-    * nowhere — a monitor never rewrites history). Exactly-once via the
-    * pointer-flip discipline. */
+    * nowhere — a monitor never rewrites history). Exactly once via
+    * [[versioned]]. */
   def ewmaMonitor(points: DataFrame, seriesCol: String, timeCol: String,
                   valueCol: String, stateRoot: String, reportRoot: String,
                   checkpointDir: String, aNum: Long = 1L, aDen: Long = 4L): Unit = {
-    val q = points.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = s"$stateRoot/v$batchId"
-        val prev = readPointer(spark, stateRoot)
-        if (prev.contains(target) || batch.isEmpty) {
-          ()
-        } else {
-          val pts = batch.toDF().select(col(seriesCol).as("series"),
-            col(timeCol).cast("long").as("t"), col(valueCol).cast("long").as("v"))
-          val state = prev.map(p => spark.read.parquet(p))
-          val fresh = state match {
-            case Some(st) => pts.join(
-                broadcast(st.select(col("series"), col("t").as("__lt"))),
-                Seq("series"), "left")
-              .filter(col("__lt").isNull || col("t") > col("__lt"))
-              .drop("__lt")
-            case None => pts
-          }
-          val walk = graft.operators.Smoothing.ewma(fresh,
-            col("series"), col("t"), col("v"), aNum, aDen,
-            carried = state.map(_.select(col("series"), col("sm"))))
-          walk.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
-          // new state: each touched series' last point; untouched series
-          // carry forward unchanged
-          val report = spark.read.parquet(s"$reportRoot/v$batchId")
-          val wLast = org.apache.spark.sql.expressions.Window
-            .partitionBy("series").orderBy(col("t").desc)
-          val touched = report
-            .withColumn("__rn", row_number().over(wLast))
-            .filter(col("__rn") === 1).select("series", "t", "sm")
-          val merged = state match {
-            case Some(st) => st.join(touched.select(col("series")), Seq("series"), "left_anti")
-              .unionByName(touched)
-            case None => touched
-          }
-          merged.write.mode("overwrite").parquet(target)
-          writePointer(spark, stateRoot, batchId, target)
+    runToSink(points, checkpointDir) { (batch, batchId) =>
+      versioned(batch, batchId, stateRoot) { (spark, prev, target) =>
+        val pts = batch.select(col(seriesCol).as("series"),
+          col(timeCol).cast("long").as("t"), col(valueCol).cast("long").as("v"))
+        val state = prev.map(p => spark.read.parquet(p))
+        val fresh = state match {
+          case Some(st) => pts.join(
+              broadcast(st.select(col("series"), col("t").as("__lt"))),
+              Seq("series"), "left")
+            .filter(col("__lt").isNull || col("t") > col("__lt"))
+            .drop("__lt")
+          case None => pts
         }
+        val walk = graft.operators.Smoothing.ewma(fresh,
+          col("series"), col("t"), col("v"), aNum, aDen,
+          carried = state.map(_.select(col("series"), col("sm"))))
+        walk.withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$reportRoot/v$batchId")
+        // new state: each touched series' last point; untouched series
+        // carry forward unchanged
+        val report = spark.read.parquet(s"$reportRoot/v$batchId")
+        val wLast = org.apache.spark.sql.expressions.Window
+          .partitionBy("series").orderBy(col("t").desc)
+        val touched = report
+          .withColumn("__rn", row_number().over(wLast))
+          .filter(col("__rn") === 1).select("series", "t", "sm")
+        val merged = state match {
+          case Some(st) => st.join(touched.select(col("series")), Seq("series"), "left_anti")
+            .unionByName(touched)
+          case None => touched
+        }
+        merged.write.mode("overwrite").parquet(target)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Current maintained EWMA state of [[ewmaMonitor]]. */
   def ewmaState(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(readPointer(spark, stateRoot).get)
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** Versioned walk history of [[ewmaMonitor]], all batches. */
   def ewmaHistory(spark: SparkSession, reportRoot: String): DataFrame =
@@ -2144,7 +1890,7 @@ object EventStreams {
 
   /** Current maintained contingency cells of [[dependenceMonitor]]. */
   def dependenceState(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(readPointer(spark, stateRoot).get)
+    spark.read.parquet(publishedVersion(spark, stateRoot))
 
   /** Versioned dependence history of [[dependenceMonitor]], all batches. */
   def dependenceHistory(spark: SparkSession, reportRoot: String): DataFrame =
@@ -2156,8 +1902,7 @@ object EventStreams {
   def bm25FromIndex(spark: SparkSession, stateRoot: String,
                     queries: Seq[(Int, String)], k: Int = 10,
                     k1Pm: Long = 1200L, bPm: Long = 750L): DataFrame = {
-    val ptr = readPointer(spark, stateRoot)
-      .getOrElse(throw new IllegalStateException(s"no published index under $stateRoot"))
+    val ptr = publishedVersion(spark, stateRoot)
     val published = ptr.substring(ptr.lastIndexOf("/v") + 2).toLong
     val root = new org.apache.hadoop.fs.Path(s"$stateRoot/postings")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

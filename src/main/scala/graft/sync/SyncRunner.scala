@@ -83,6 +83,25 @@ final class SyncRunner(store: StateStore, threshold: ErrorThreshold = ErrorThres
     } finally { flagged.unpersist(blocking = false); () }
   }
 
+  /** The rows the next run of `syncId` reads, with the persisted cursor
+    * they start past (None on a first run or a full refresh, which read
+    * the whole model). Incremental cursor (reference: `:cursor`
+    * substitution): SQL-text models bind the value INTO their query as a
+    * typed parameter; DataFrame models get a cursorCol predicate (both
+    * reach the scan). */
+  def increment(spark: SparkSession, model: Model, syncId: String,
+                fullRefresh: Boolean = false): (Option[String], DataFrame) = {
+    val lastCursor = if (fullRefresh) None else store.get(cursorKey(syncId))
+    val rows = (model.buildIncremental, model.cursorCol, lastCursor) match {
+      case (Some(bi), _, Some(v)) => bi(spark, v)
+      case (None, Some(c), Some(v)) =>
+        val base = model.build(spark)
+        base.filter(col(c) > lit(v).cast(base.schema(c).dataType))
+      case _ => model.build(spark)
+    }
+    (lastCursor, rows)
+  }
+
   /** One sync run. `sink` receives the validated, enriched, mapped rows
     * and must consume them before returning (they read a run-scoped
     * cache). `checkpointEvery` enables mid-run checkpoints roughly every
@@ -91,18 +110,7 @@ final class SyncRunner(store: StateStore, threshold: ErrorThreshold = ErrorThres
           sink: DataFrame => Unit, fullRefresh: Boolean = false,
           enrich: DataFrame => DataFrame = identity,
           checkpointEvery: Option[Long] = None): SyncReport = {
-    // incremental cursor (reference: `:cursor` substitution) — SQL-text
-    // models bind the value INTO their query as a typed parameter;
-    // DataFrame models get a cursorCol predicate (both reach the scan).
-    val lastCursor = if (fullRefresh) None else store.get(cursorKey(syncId))
-    val increment = (model.buildIncremental, model.cursorCol, lastCursor) match {
-      case (Some(bi), _, Some(v)) => bi(spark, v)
-      case (None, Some(c), Some(v)) =>
-        val base = model.build(spark)
-        base.filter(col(c) > lit(v).cast(base.schema(c).dataType))
-      case _ => model.build(spark)
-    }
-
+    val (lastCursor, increment) = this.increment(spark, model, syncId, fullRefresh)
     val report = checkpointEvery match {
       case Some(every) if model.cursorCol.isDefined =>
         runChunked(model, syncId, increment, lastCursor, every, enrich, sink)

@@ -439,12 +439,12 @@ class ProjectSpec extends SparkSuite {
     assert(after.length == rows.length)
   }
 
-  test("command connection: the sync delivers through a real connector process") {
-    val dir = makeProject()
+  /** A stdio-protocol connector as a project-local script, the reference's
+    * `package.type: npm` command flavor (types/objects.ts:34-40), wired as
+    * the `cmd_dest` connection; rows land in per-lane ndjson files under
+    * the returned directory. */
+  private def writeCmdConnector(dir: String): String = {
     val outDir = Files.createTempDirectory("graft-cmd-out").toString
-    // a stdio-protocol connector as a project-local script, the reference's
-    // `package.type: npm` command flavor (types/objects.ts:34-40); rows
-    // land in per-lane ndjson files
     write(dir, "connector/dest.sh",
       s"""#!/bin/sh
          |n=0
@@ -466,17 +466,22 @@ class ProjectSpec extends SparkSuite {
         |credentials:
         |  apiKey: ${env.FB_TOKEN}
         |""".stripMargin)
+    // make the script runnable from the project dir
+    val script = Paths.get(dir, "connector/dest.sh")
+    Files.setPosixFilePermissions(script,
+      java.nio.file.attribute.PosixFilePermissions.fromString("rwxr-xr-x"))
+    outDir
+  }
+
+  test("command connection: the sync delivers through a real connector process") {
+    val dir = makeProject()
+    val outDir = writeCmdConnector(dir)
     write(dir, "syncs/orders_to_cmd.yaml",
       """model: orders_model
         |destination: cmd_dest
         |options:
         |  stream: orders
         |""".stripMargin)
-    // make the script runnable from the project dir
-    val script = Paths.get(dir, "connector/dest.sh")
-    Files.setPosixFilePermissions(script,
-      java.nio.file.attribute.PosixFilePermissions.fromString("rwxr-xr-x"))
-
     val proj = ProjectLoader.load(dir, baseEnv = Map("WAREHOUSE" -> s"parquet:$sfDir"))
     val conn = proj.connections("cmd_dest")
     assert(conn.command.contains("/bin/sh connector/dest.sh") && conn.kind == "cmd_dest")
@@ -495,5 +500,32 @@ class ProjectSpec extends SparkSuite {
     val after = new java.io.File(outDir).listFiles().filter(_.getName.endsWith(".ndjson"))
       .flatMap(f => scala.io.Source.fromFile(f).getLines().toSeq).length
     assert(r2.rowsIn == 0 && after == before, "incremental re-run moves no rows")
+  }
+
+  test("runContinuous: a command connection delivers every micro-batch through the connector process") {
+    val dir = makeProject()
+    val outDir = writeCmdConnector(dir)
+    write(dir, "models/orders_stream.sql",
+      s"""--{{ config "datasource" env.WAREHOUSE }}
+         |SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+         |""".stripMargin)
+    write(dir, "syncs/cmd_continuous.yaml",
+      """model: orders_stream
+        |destination: cmd_dest
+        |options:
+        |  streamTable: orders
+        |""".stripMargin)
+    val proj = ProjectLoader.load(dir, baseEnv = Map("WAREHOUSE" -> s"parquet:$sfDir"))
+    val rec = new Recorder
+    val total = spark.read.parquet(s"$sfDir/orders.parquet").count()
+
+    val reports = proj.runContinuous(spark, "cmd_continuous", StateStore.inMemory(), rec,
+      Files.createTempDirectory("graft-cmd-cont-ckpt").toString)
+    assert(reports.map(_.rowsIn).sum == total)
+    val rows = new java.io.File(outDir).listFiles().filter(_.getName.endsWith(".ndjson"))
+      .flatMap(f => scala.io.Source.fromFile(f).getLines().toSeq)
+    assert(rows.length.toLong == total, "every streamed row crossed the process boundary")
+    assert(rows.forall(_.contains("\"o_orderkey\"")), "rows carry the model's JSON projection")
+    assert(rec.rows == 0, "a command connection never falls back to the REST transport")
   }
 }

@@ -1593,4 +1593,78 @@ class StreamingSpec extends SparkSuite {
     runOnce()
     assert(EventStreams.aucHistory(spark, rep).count() == 3)
   }
+
+  test("state readouts on a root no batch has published to fail loudly, naming the root") {
+    val root = Files.createTempDirectory("graft-unpublished").toString
+    val readouts = Seq[() => Any](
+      () => EventStreams.kmvState(spark, root),
+      () => EventStreams.cusumState(spark, root))
+    for (read <- readouts) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains(root), s"got ${e.getMessage}")
+    }
+  }
+
+  test("exactly-once steps: a replayed batch id keeps the published version, an empty batch " +
+       "publishes nothing, prior slices never include the batch's own version") {
+    def tmp(tag: String) = Files.createTempDirectory(s"graft-steps-$tag").toString
+    def entries(root: String, prefix: String): Seq[String] =
+      Option(new java.io.File(root).listFiles).toSeq.flatten.map(_.getName)
+        .filter(n => n.startsWith(prefix) && !n.endsWith(".tmp")).sorted
+    def events(rows: Seq[(Long, Timestamp, Long, String, Double)]) =
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+
+    // replay: a fresh checkpoint re-runs batch id 0 over ALL files; its
+    // version is already published, so the merge does not apply twice
+    val in = tmp("agg-in"); val state = tmp("agg-state")
+    def runAgg(ckpt: String): Unit = EventStreams.aggMaintenance(
+      EventStreams.readEvents(spark, in), Seq("event_type"), "value", state, ckpt)
+    def readout() = EventStreams.aggReadout(spark, state, Seq("event_type"))
+      .select("event_type", "n_rows").as[(String, Long)].collect().toMap
+    events(Seq((1L, ts(0.0), 1L, "view", 1.0), (2L, ts(1.0), 2L, "view", 2.0)))
+      .coalesce(1).write.mode("append").parquet(in)
+    runAgg(tmp("agg-ckpt"))
+    assert(readout() == Map("view" -> 2L))
+    events(Seq((3L, ts(2.0), 3L, "view", 3.0)))
+      .coalesce(1).write.mode("append").parquet(in)
+    runAgg(tmp("agg-ckpt2"))
+    assert(entries(state, "_latest_v") == Seq("_latest_v0") && readout() == Map("view" -> 2L),
+      "replayed batch 0 must not re-merge")
+
+    // empty: an input file with no rows is a micro-batch that publishes
+    // nothing — no pointer, no done-marker
+    val emptyIn = tmp("empty-in")
+    events(Nil).coalesce(1).write.mode("append").parquet(emptyIn)
+    val aggState = tmp("empty-agg"); val aggCkpt = tmp("empty-agg-ckpt")
+    EventStreams.aggMaintenance(EventStreams.readEvents(spark, emptyIn),
+      Seq("event_type"), "value", aggState, aggCkpt)
+    assert(new java.io.File(s"$aggCkpt/commits/0").exists, "the empty file ran as batch 0")
+    assert(entries(aggState, "_latest_v").isEmpty, s"got ${entries(aggState, "")}")
+    val docsIn = tmp("empty-docs")
+    Seq.empty[(Long, String)].toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(docsIn)
+    val idx = tmp("empty-idx"); val docsCkpt = tmp("empty-docs-ckpt")
+    EventStreams.dedupIngest(spark.readStream.schema("doc_id LONG, text STRING").parquet(docsIn),
+      idx, tmp("empty-matches"), docsCkpt)
+    assert(new java.io.File(s"$docsCkpt/commits/0").exists, "the empty file ran as batch 0")
+    assert(entries(idx, "_done_v").isEmpty, s"got ${entries(idx, "")}")
+
+    // prior slices: batch 1 crashed after writing its seen-key slice but
+    // before its marker; on replay it must not probe that slice, or its
+    // own URL would look already seen and never reach the frontier
+    val urlIn = tmp("url-in"); val seen = tmp("url-seen"); val out = tmp("url-out")
+    val urlCkpt = tmp("url-ckpt")
+    def runUrls(): Unit = EventStreams.urlFrontier(
+      spark.readStream.schema("url STRING").parquet(urlIn), seen, out, urlCkpt)
+    Seq("https://a.com/p").toDF("url").coalesce(1).write.mode("append").parquet(urlIn)
+    runUrls()
+    Seq("https://c.com/r").toDF("url")
+      .select(graft.operators.Urls.canonicalize(col("url")).as("canonical_url"))
+      .write.mode("overwrite").parquet(s"$seen/keys/v1")
+    Seq("https://c.com/r").toDF("url").coalesce(1).write.mode("append").parquet(urlIn)
+    runUrls()
+    val frontier = spark.read.option("recursiveFileLookup", "true").parquet(out)
+      .select("url_example").as[String].collect().toSet
+    assert(frontier == Set("https://a.com/p", "https://c.com/r"), s"got $frontier")
+    assert(entries(seen, "_done_v") == Seq("_done_v0", "_done_v1"))
+  }
 }
