@@ -132,6 +132,25 @@ object Cli {
 
   private val dirAliases = Map("-d" -> "projectDir", "--project-dir" -> "projectDir")
 
+  /** The `-e`/`--env` files, in the order given (the flag repeats). */
+  private def envFilesOf(flags: Map[String, String]): Seq[String] =
+    flags.get("env+").map(_.split(" ").toSeq)
+      .orElse(flags.get("env").map(Seq(_))).getOrElse(Nil)
+
+  /** One `sync --plan` line, then one line per model-fit issue. */
+  private def printPlan(p: ProjectLoader.SyncPlan, out: String => Unit): Unit = {
+    out(s"✔ ${p.syncId} → ${p.destinationKind}: ${p.rows} rows in ${p.delivery.batches} " +
+      s"batch(es), min ${p.delivery.minSeconds}s" +
+      p.lastCursor.fold("")(c => s", cursor > $c"))
+    p.fitIssues.foreach(i => out(s"  ⚠ ${i.column}: ${i.detail}"))
+  }
+
+  /** The one-line report of a finished sync run. */
+  private def printReport(r: graft.sync.SyncRunner#SyncReport, out: String => Unit): Unit =
+    out(s"✔ ${r.syncId}: ${r.rowsValid}/${r.rowsIn} rows delivered" +
+      (if (r.rowsInvalid > 0) s" (${r.rowsInvalid} invalid skipped)" else "") +
+      r.newCursor.fold("")(c => s", cursor now $c"))
+
   // ---------------------------------------------------------------- init
 
   /** init.ts:12-44: refuse a non-empty directory; scaffold models/ syncs/
@@ -369,9 +388,7 @@ object Cli {
     // -c <credentials> runs one sync WITHOUT a project directory
     if (flags.contains("model")) return adhocSync(flags, out, spark)
     val dir = projectDir(flags, pos)
-    val envFiles = flags.get("env+").map(_.split(" ").toSeq)
-      .orElse(flags.get("env").map(Seq(_))).getOrElse(Nil)
-    val project = ProjectLoader.load(dir, extraEnvFiles = envFiles)
+    val project = ProjectLoader.load(dir, extraEnvFiles = envFilesOf(flags))
     val selected = flags.get("select")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(project.syncs.keys.toSeq.sorted)
@@ -381,13 +398,9 @@ object Cli {
     val full = flags.contains("fullRefresh")
     var failures = 0
     selected.foreach { id =>
-      if (flags.contains("plan")) {
-        val p = project.planSync(spark(), id, store, fullRefresh = full)
-        out(s"✔ $id → ${p.destinationKind}: ${p.rows} rows in ${p.delivery.batches} " +
-          s"batch(es), min ${p.delivery.minSeconds}s" +
-          p.lastCursor.fold("")(c => s", cursor > $c"))
-        p.fitIssues.foreach(i => out(s"  ⚠ ${i.column}: ${i.detail}"))
-      } else try {
+      if (flags.contains("plan"))
+        printPlan(project.planSync(spark(), id, store, fullRefresh = full), out)
+      else try {
         val conn = project.connections(project.syncs(id).destination)
         // image connections route through the container runtime when one
         // is named (`--container-runtime docker`); without it they use the
@@ -396,9 +409,7 @@ object Cli {
           .map(b => graft.sinks.ContainerRuntime(binary = b))
         val r = project.runSync(spark(), id, store, transportFor(project, conn, rt),
           fullRefresh = full, containerRuntime = rt)
-        out(s"✔ $id: ${r.rowsValid}/${r.rowsIn} rows delivered" +
-          (if (r.rowsInvalid > 0) s" (${r.rowsInvalid} invalid skipped)" else "") +
-          r.newCursor.fold("")(c => s", cursor now $c"))
+        printReport(r, out)
       } catch {
         case e: Exception => out(s"✘ $id failed: ${e.getMessage}"); failures += 1
       }
@@ -456,9 +467,7 @@ object Cli {
       throw new IllegalArgumentException("ad-hoc sync needs -p <package> with -m and -c"))
     val cwd = System.getProperty("user.dir")
     // -e env files layer over .env/.env.local exactly like project mode
-    val envFiles = flags.get("env+").map(_.split(" ").toSeq)
-      .orElse(flags.get("env").map(Seq(_))).getOrElse(Nil)
-    val env = graft.project.EnvVars.projectEnv(cwd, envFiles, sys.env)
+    val env = graft.project.EnvVars.projectEnv(cwd, envFilesOf(flags), sys.env)
     val modelText = graft.project.EnvVars.substitute(
       readArgOrFile(flags("model")), env, "adhoc model")
     val md0 = ProjectLoader.parseModel(Paths.get("adhoc.sql"), modelText, env)
@@ -491,19 +500,13 @@ object Cli {
     try {
       if (flags.contains("plan")) {
         // --plan is a DRY RUN here too — pricing, never delivery
-        val p = project.planSync(spark(), syncId, store,
-          fullRefresh = flags.contains("fullRefresh"))
-        out(s"✔ $syncId → ${p.destinationKind}: ${p.rows} rows in ${p.delivery.batches} " +
-          s"batch(es), min ${p.delivery.minSeconds}s" +
-          p.lastCursor.fold("")(c => s", cursor > $c"))
-        p.fitIssues.foreach(i => out(s"  ⚠ ${i.column}: ${i.detail}"))
+        printPlan(project.planSync(spark(), syncId, store,
+          fullRefresh = flags.contains("fullRefresh")), out)
         return 0
       }
       val r = project.runSync(spark(), syncId, store, transportFor(project, conn, rt),
         fullRefresh = flags.contains("fullRefresh"), containerRuntime = rt)
-      out(s"✔ $syncId: ${r.rowsValid}/${r.rowsIn} rows delivered" +
-        (if (r.rowsInvalid > 0) s" (${r.rowsInvalid} invalid skipped)" else "") +
-        r.newCursor.fold("")(c => s", cursor now $c"))
+      printReport(r, out)
       0
     } catch {
       case e: Exception => out(s"✘ $syncId failed: ${e.getMessage}"); 1
@@ -532,10 +535,8 @@ object Cli {
       throw new IllegalArgumentException("connector-dev needs -m <model-file>"))
     val connFile = flags.getOrElse("connection",
       throw new IllegalArgumentException("connector-dev needs -c <connection-file>"))
-    val envFiles = flags.get("env+").map(_.split(" ").toSeq)
-      .orElse(flags.get("env").map(Seq(_))).getOrElse(Nil)
     val project = ProjectLoader.adhoc(dir, modelFile, connFile,
-      syncRef = flags.getOrElse("sync", "sync"), extraEnvFiles = envFiles)
+      syncRef = flags.getOrElse("sync", "sync"), extraEnvFiles = envFilesOf(flags))
     val syncId = project.syncs.keys.head
     val conn = project.connections(project.syncs(syncId).destination)
     out(s"Running sync $syncId with model ${project.syncs(syncId).model} " +
@@ -545,9 +546,7 @@ object Cli {
     try {
       val r = project.runSync(spark(), syncId, store, transportFor(project, conn, None),
         fullRefresh = flags.contains("fullRefresh"))
-      out(s"✔ $syncId: ${r.rowsValid}/${r.rowsIn} rows delivered" +
-        (if (r.rowsInvalid > 0) s" (${r.rowsInvalid} invalid skipped)" else "") +
-        r.newCursor.fold("")(c => s", cursor now $c"))
+      printReport(r, out)
       0
     } catch {
       case e: Exception => out(s"✘ $syncId failed: ${e.getMessage}"); 1

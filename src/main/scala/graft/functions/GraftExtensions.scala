@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /**
  * SparkSessionExtensions hook registering graft's native expressions under
@@ -13,153 +13,77 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      exprs => {
-        require(exprs.length == 2, "dot_product(arrayA, arrayB) takes 2 arguments")
-        DotProduct(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
-      exprs => {
-        require(exprs.length == 2, "ngram_hashes(tokens, n) takes 2 arguments")
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"ngram_hashes n must be an integer literal, got $other")
-        }
-        NgramHashes(exprs.head, n)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("quantize_i8"),
-      new ExpressionInfo(classOf[QuantizeI8].getName, "quantize_i8"),
-      exprs => {
-        require(exprs.length == 1, "quantize_i8(vector) takes 1 argument")
-        QuantizeI8(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      exprs => {
-        require(exprs.nonEmpty && exprs.length <= 2,
-          "rolling_hash(tokens[, portable]) takes 1-2 arguments")
-        val portable = exprs.lift(1).exists {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, _) => v
-          case other => throw new IllegalArgumentException(
-            s"rolling_hash portable flag must be a boolean literal, got $other")
-        }
-        RollingHash(exprs.head, portable)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      exprs => {
-        require(exprs.length == 2, "minhash_signature(hashes, numPerm) takes 2 arguments")
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_signature numPerm must be an integer literal, got $other")
-        }
-        MinHashSignature(exprs.head, n)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      exprs => {
-        require(exprs.length == 1, "simhash64(tokens) takes 1 argument")
-        SimHash64(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("char_histogram"),
-      new ExpressionInfo(classOf[CharHistogram].getName, "char_histogram"),
-      exprs => {
-        require(exprs.length == 1, "char_histogram(text) takes 1 argument")
-        CharHistogram(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("l1_distance"),
-      new ExpressionInfo(classOf[L1Distance].getName, "l1_distance"),
-      exprs => {
-        require(exprs.length == 2, "l1_distance(histA, histB) takes 2 arguments")
-        L1Distance(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("count_min_build"),
-      new ExpressionInfo(classOf[CountMinAgg].getName, "count_min_build"),
-      exprs => {
-        require(exprs.length == 1 || exprs.length == 4,
-          "count_min_build(item[, depth, width, seed]) takes 1 or 4 arguments")
-        def intLit(i: Int, what: String): Int = exprs(i) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"count_min_build $what must be an integer literal, got $other")
-        }
-        if (exprs.length == 1) CountMinAgg(exprs.head, 5, 2048, 42).toAggregateExpression()
-        else CountMinAgg(exprs.head, intLit(1, "depth"), intLit(2, "width"),
-          intLit(3, "seed")).toAggregateExpression()
-      }))
-    e.injectFunction((
-      FunctionIdentifier("count_min_merge"),
-      new ExpressionInfo(classOf[CountMinMergeAgg].getName, "count_min_merge"),
-      exprs => {
-        require(exprs.length == 1, "count_min_merge(sketch) takes 1 argument")
-        CountMinMergeAgg(exprs.head).toAggregateExpression()
-      }))
-    e.injectFunction((
-      FunctionIdentifier("count_min_query"),
-      new ExpressionInfo(classOf[CountMinQuery].getName, "count_min_query"),
-      exprs => {
-        require(exprs.length == 2, "count_min_query(sketch, item) takes 2 arguments")
-        CountMinQuery(exprs.head, exprs(1))
-      }))
-    // media container codecs — the multi-arg encoders take one struct
-    // child, so the SQL shims pack the argument list for the caller
-    e.injectFunction((
-      FunctionIdentifier("image_bytes"),
-      new ExpressionInfo(classOf[ImageBytes].getName, "image_bytes"),
-      exprs => {
-        require(exprs.length == 5,
-          "image_bytes(kind, width, height, depth, pad) takes 5 arguments")
-        ImageBytes(org.apache.spark.sql.catalyst.expressions.CreateStruct(exprs))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("image_meta"),
-      new ExpressionInfo(classOf[ImageMeta].getName, "image_meta"),
-      exprs => {
-        require(exprs.length == 1, "image_meta(bytes) takes 1 argument")
-        ImageMeta(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("audio_bytes"),
-      new ExpressionInfo(classOf[AudioBytes].getName, "audio_bytes"),
-      exprs => {
-        require(exprs.length == 5,
-          "audio_bytes(sample_rate, channels, bits, n_samples, pad) takes 5 arguments")
-        AudioBytes(org.apache.spark.sql.catalyst.expressions.CreateStruct(exprs))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("audio_meta"),
-      new ExpressionInfo(classOf[AudioMeta].getName, "audio_meta"),
-      exprs => {
-        require(exprs.length == 1, "audio_meta(bytes) takes 1 argument")
-        AudioMeta(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("video_bytes"),
-      new ExpressionInfo(classOf[VideoBytes].getName, "video_bytes"),
-      exprs => {
-        require(exprs.length == 3,
-          "video_bytes(timescale, duration, pad) takes 3 arguments")
-        VideoBytes(org.apache.spark.sql.catalyst.expressions.CreateStruct(exprs))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("video_meta"),
-      new ExpressionInfo(classOf[VideoMeta].getName, "video_meta"),
-      exprs => {
-        require(exprs.length == 1, "video_meta(bytes) takes 1 argument")
-        VideoMeta(exprs.head)
-      }))
+    /** Registers `name`; a call whose argument count is not in `arities`
+      * fails with `usage`. */
+    def register(name: String, cls: Class[_], usage: String, arities: Int*)(
+        build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        exprs => {
+          require(arities.contains(exprs.length), usage)
+          build(exprs)
+        }))
+
+    register("dot_product", classOf[DotProduct],
+      "dot_product(arrayA, arrayB) takes 2 arguments", 2)(a => DotProduct(a.head, a(1)))
+    register("ngram_hashes", classOf[NgramHashes],
+      "ngram_hashes(tokens, n) takes 2 arguments", 2) { a =>
+      NgramHashes(a.head, intLit("ngram_hashes", "n", a(1)))
+    }
+    register("quantize_i8", classOf[QuantizeI8],
+      "quantize_i8(vector) takes 1 argument", 1)(a => QuantizeI8(a.head))
+    register("rolling_hash", classOf[RollingHash],
+      "rolling_hash(tokens[, portable]) takes 1-2 arguments", 1, 2) { a =>
+      val portable = a.lift(1).exists {
+        case Literal(v: Boolean, _) => v
+        case other => throw new IllegalArgumentException(
+          s"rolling_hash portable flag must be a boolean literal, got $other")
+      }
+      RollingHash(a.head, portable)
+    }
+    register("minhash_signature", classOf[MinHashSignature],
+      "minhash_signature(hashes, numPerm) takes 2 arguments", 2) { a =>
+      MinHashSignature(a.head, intLit("minhash_signature", "numPerm", a(1)))
+    }
+    register("simhash64", classOf[SimHash64],
+      "simhash64(tokens) takes 1 argument", 1)(a => SimHash64(a.head))
+    register("char_histogram", classOf[CharHistogram],
+      "char_histogram(text) takes 1 argument", 1)(a => CharHistogram(a.head))
+    register("l1_distance", classOf[L1Distance],
+      "l1_distance(histA, histB) takes 2 arguments", 2)(a => L1Distance(a.head, a(1)))
+    register("count_min_build", classOf[CountMinAgg],
+      "count_min_build(item[, depth, width, seed]) takes 1 or 4 arguments", 1, 4) { a =>
+      def int(i: Int, what: String) = intLit("count_min_build", what, a(i))
+      if (a.length == 1) CountMinAgg(a.head, 5, 2048, 42).toAggregateExpression()
+      else CountMinAgg(a.head, int(1, "depth"), int(2, "width"), int(3, "seed"))
+        .toAggregateExpression()
+    }
+    register("count_min_merge", classOf[CountMinMergeAgg],
+      "count_min_merge(sketch) takes 1 argument", 1) { a =>
+      CountMinMergeAgg(a.head).toAggregateExpression()
+    }
+    register("count_min_query", classOf[CountMinQuery],
+      "count_min_query(sketch, item) takes 2 arguments", 2)(a => CountMinQuery(a.head, a(1)))
+    // media container codecs: static kernels bound by `Kernel`
+    register("image_bytes", ImageCodecUtil.getClass,
+      "image_bytes(kind, width, height, depth, pad) takes 5 arguments", 5)(
+      ImageFunctions.encode.expr)
+    register("image_meta", ImageCodecUtil.getClass,
+      "image_meta(bytes) takes 1 argument", 1)(ImageFunctions.parse.expr)
+    register("audio_bytes", MediaCodecUtil.getClass,
+      "audio_bytes(sample_rate, channels, bits, n_samples, pad) takes 5 arguments", 5)(
+      MediaFunctions.wavEncode.expr)
+    register("audio_meta", MediaCodecUtil.getClass,
+      "audio_meta(bytes) takes 1 argument", 1)(MediaFunctions.wavParse.expr)
+    register("video_bytes", MediaCodecUtil.getClass,
+      "video_bytes(timescale, duration, pad) takes 3 arguments", 3)(MediaFunctions.mp4Encode.expr)
+    register("video_meta", MediaCodecUtil.getClass,
+      "video_meta(bytes) takes 1 argument", 1)(MediaFunctions.mp4Parse.expr)
+  }
+
+  /** The integer literal `x` passed as `fn`'s `what` argument. */
+  private def intLit(fn: String, what: String, x: Expression): Int = x match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$fn $what must be an integer literal, got $other")
   }
 }

@@ -4,10 +4,7 @@ import java.util.zip.CRC32
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.{functions => F, graftbridge => bridge}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,6 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * C12 — REAL image-container codecs for the multimodal column family:
  * byte-exact PNG / JPEG (JFIF) / GIF header encode and a marker-walking
  * metadata parser, both as codegen'd Catalyst expressions (no UDFs).
+ *
+ * Both are one static call, so they are bound with [[Kernel]] (Spark's
+ * `StaticInvoke`, in MediaExpressions.scala), never with a hand-written
+ * `Expression`. Write an `Expression` class only when its `doGenCode`
+ * emits its own code.
  *
  * The container structures follow the public specs — PNG (RFC 2083: 8-byte
  * signature, IHDR first chunk, CRC-32 over type+data), JPEG/JFIF (ISO
@@ -192,73 +194,22 @@ object ImageCodecUtil {
   }
 }
 
-/** Encode struct<kind:int, width:int, height:int, depth:int, pad:int> →
-  * container bytes. Codegen'd; the byte assembly runs in the static
-  * [[ImageCodecUtil]] kernel (one small allocation per row, no boxing). */
-case class ImageBytes(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.length == 5 && s.forall(_.dataType == IntegerType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires struct<int,int,int,int,int>, got $other")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "image_bytes"
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[InternalRow]
-    ImageCodecUtil.encode(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, row => s"""
-      |${ev.value} = graft.functions.ImageCodecUtil.encode(
-      |  $row.getInt(0), $row.getInt(1), $row.getInt(2), $row.getInt(3), $row.getInt(4));
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): ImageBytes =
-    copy(child = newChild)
-}
-
-/** Parse container bytes → struct(format, width, height, depth); null for
-  * unrecognizable/corrupt buffers. Codegen'd marker walk via the static
-  * [[ImageCodecUtil]] kernel. */
-case class ImageMeta(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got $other")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType), StructField("width", IntegerType),
-    StructField("height", IntegerType), StructField("depth", IntegerType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    ImageCodecUtil.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes => s"""
-      |${ev.value} = graft.functions.ImageCodecUtil.parse($bytes);
-      |${ev.isNull} = ${ev.value} == null;
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): ImageMeta =
-    copy(child = newChild)
-}
-
-/** Column-level entry points. */
+/** Column-level entry points; the `private[functions]` kernels are also
+  * the SQL functions [[GraftExtensions]] registers. */
 object ImageFunctions {
+  private val I = IntegerType
+
+  private[functions] val encode = Kernel.encoder(ImageCodecUtil, "encode", I, I, I, I, I)
+  private[functions] val parse = Kernel.parser(ImageCodecUtil, "parse",
+    "format" -> StringType, "width" -> I, "height" -> I, "depth" -> I)
+
   /** Synthesize container bytes from (kind 0=png/1=jpeg/2=gif, width,
     * height, depth, pad) int columns. */
   def imageBytes(kind: Column, width: Column, height: Column,
                  depth: Column, pad: Column): Column =
-    bridge.column(ImageBytes(bridge.expression(
-      F.struct(kind.cast("int"), width.cast("int"), height.cast("int"),
-        depth.cast("int"), pad.cast("int")))))
+    encode(kind, width, height, depth, pad)
 
-  /** Parse image-container bytes → struct(format, width, height, depth). */
-  def imageMeta(bytes: Column): Column =
-    bridge.column(ImageMeta(bridge.expression(bytes)))
+  /** Parse image-container bytes → struct(format, width, height, depth);
+    * null for unrecognizable or corrupt buffers (marker walk). */
+  def imageMeta(bytes: Column): Column = parse(bytes)
 }

@@ -2,10 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.{functions => F, graftbridge => bridge}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.{graftbridge => bridge}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,6 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * (ISO BMFF), AAC ADTS and Ogg Vorbis encode plus chunk/box/frame/
  * page-walking metadata parsers, all as codegen'd Catalyst expressions
  * (no UDFs).
+ *
+ * Each kernel is one static call, so it is bound with [[Kernel]] (Spark's
+ * `StaticInvoke`), never with a hand-written `Expression`. Write an
+ * `Expression` class only when its `doGenCode` emits its own code (a
+ * loop, an aggregate buffer), as the vector and sketch families do.
  *
  * The container structures follow the public specs — RIFF/WAVE
  * (Microsoft/IBM RIFF 1.0: little-endian chunk id+size stream,
@@ -394,321 +398,100 @@ object MediaCodecUtil {
   }
 }
 
-/** Encode struct<sample_rate:int, channels:int, bits:int, n_samples:int,
-  * pad:int> → WAV container bytes. Codegen'd; byte assembly runs in the
-  * static [[MediaCodecUtil]] kernel. */
-case class AudioBytes(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.length == 5 && s.forall(_.dataType == IntegerType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires struct<int,int,int,int,int>, got $other")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "audio_bytes"
+/** A one-call static kernel bound as a Catalyst expression: Spark's
+  * codegen'd `StaticInvoke` of `obj.method(args)`, so the kernel runs
+  * inside the generated code, not behind a UDF. SQL arguments are
+  * implicitly cast to `inputTypes`, the column form casts each argument
+  * explicitly, and a null argument gives null. Only a parser
+  * (`mayReturnNull`) returns null itself, for a buffer it cannot read. */
+private[functions] final case class Kernel(obj: AnyRef, method: String,
+    inputTypes: Seq[DataType], dataType: DataType, mayReturnNull: Boolean) {
+  def expr(args: Seq[Expression]): Expression =
+    StaticInvoke(obj.getClass, dataType, method, args, inputTypes,
+      returnNullable = mayReturnNull)
 
-  override def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[InternalRow]
-    MediaCodecUtil.encodeWav(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, row => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.encodeWav(
-      |  $row.getInt(0), $row.getInt(1), $row.getInt(2), $row.getInt(3), $row.getInt(4));
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioBytes =
-    copy(child = newChild)
+  def apply(args: Column*): Column =
+    bridge.column(expr(args.zip(inputTypes).map { case (c, t) => bridge.expression(c.cast(t)) }))
 }
 
-/** Parse WAV bytes → struct(format, sample_rate, channels, bits,
-  * n_samples); null for unrecognizable buffers. Codegen'd chunk walk. */
-case class AudioMeta(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got $other")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType), StructField("sample_rate", IntegerType),
-    StructField("channels", IntegerType), StructField("bits", IntegerType),
-    StructField("n_samples", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_meta"
+private[functions] object Kernel {
+  def encoder(obj: AnyRef, method: String, inputTypes: DataType*): Kernel =
+    Kernel(obj, method, inputTypes, BinaryType, mayReturnNull = false)
 
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecUtil.parseWav(input.asInstanceOf[Array[Byte]])
+  def parser(obj: AnyRef, method: String, fields: (String, DataType)*): Kernel =
+    Kernel(obj, method, Seq(BinaryType), struct(fields: _*), mayReturnNull = true)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.parseWav($bytes);
-      |${ev.isNull} = ${ev.value} == null;
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioMeta =
-    copy(child = newChild)
+  def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (name, t) => StructField(name, t) })
 }
 
-/** Encode struct<timescale:int, duration:long, pad:int> → MP4 container
-  * bytes. Codegen'd via the static [[MediaCodecUtil]] kernel. */
-case class VideoBytes(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.length == 3 && s(0).dataType == IntegerType &&
-        s(1).dataType == LongType && s(2).dataType == IntegerType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires struct<int,bigint,int>, got $other")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "video_bytes"
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[InternalRow]
-    MediaCodecUtil.encodeMp4(r.getInt(0), r.getLong(1), r.getInt(2))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, row => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.encodeMp4(
-      |  $row.getInt(0), $row.getLong(1), $row.getInt(2));
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoBytes =
-    copy(child = newChild)
-}
-
-/** Parse MP4 bytes → struct(format, brand, timescale, duration); null for
-  * unrecognizable buffers. Codegen'd box walk. */
-case class VideoMeta(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got $other")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType), StructField("brand", StringType),
-    StructField("timescale", IntegerType), StructField("duration", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "video_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecUtil.parseMp4(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.parseMp4($bytes);
-      |${ev.isNull} = ${ev.value} == null;
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoMeta =
-    copy(child = newChild)
-}
-
-/** Encode struct<sfi:int, channels:int, frames:int, payload_len:int> →
-  * AAC ADTS stream bytes. Codegen'd via the static kernel. */
-case class AdtsBytes(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.length == 4 && s.forall(_.dataType == IntegerType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires struct<int,int,int,int>, got $other")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "adts_bytes"
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[InternalRow]
-    MediaCodecUtil.encodeAdts(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, row => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.encodeAdts(
-      |  $row.getInt(0), $row.getInt(1), $row.getInt(2), $row.getInt(3));
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AdtsBytes =
-    copy(child = newChild)
-}
-
-/** Parse ADTS bytes → struct(format, sample_rate, channels, profile,
-  * frames, n_samples); null for non-ADTS buffers. Codegen'd frame walk. */
-case class AdtsMeta(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got $other")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType), StructField("sample_rate", IntegerType),
-    StructField("channels", IntegerType), StructField("profile", IntegerType),
-    StructField("frames", LongType), StructField("n_samples", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "adts_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecUtil.parseAdts(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.parseAdts($bytes);
-      |${ev.isNull} = ${ev.value} == null;
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AdtsMeta =
-    copy(child = newChild)
-}
-
-/** Encode struct<channels:int, sample_rate:int, total_samples:long,
-  * payload_len:int, serial:int> → Ogg Vorbis stream bytes (real RFC 3533
-  * page CRCs). Codegen'd via the static kernel. */
-case class OggVorbisBytes(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.length == 5 &&
-      s.fields.map(_.dataType).sameElements(
-        Array[DataType](IntegerType, IntegerType, LongType, IntegerType, IntegerType)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires struct<int,int,long,int,int>, got $other")
-  }
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ogg_vorbis_bytes"
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[InternalRow]
-    MediaCodecUtil.encodeOggVorbis(
-      r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3), r.getInt(4))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, row => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.encodeOggVorbis(
-      |  $row.getInt(0), $row.getInt(1), $row.getLong(2), $row.getInt(3), $row.getInt(4));
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): OggVorbisBytes =
-    copy(child = newChild)
-}
-
-/** Parse Ogg Vorbis bytes → struct(format, sample_rate, channels, pages,
-  * total_samples, serial); null for non-Ogg buffers or any page CRC
-  * mismatch. Codegen'd page walk. */
-case class OggMeta(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got $other")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType), StructField("sample_rate", IntegerType),
-    StructField("channels", IntegerType), StructField("pages", LongType),
-    StructField("total_samples", LongType), StructField("serial", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "ogg_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    MediaCodecUtil.parseOggVorbis(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes => s"""
-      |${ev.value} = graft.functions.MediaCodecUtil.parseOggVorbis($bytes);
-      |${ev.isNull} = ${ev.value} == null;
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): OggMeta =
-    copy(child = newChild)
-}
-
-/** FLAC roundtrip probe: struct<seed:long, n:int, step:int, rate:int> →
-  * struct(format, sample_rate, channels, bits, total_samples, sum_s,
-  * min_s, max_s, wsum_s, roundtrip_ok) — synthesizes the deterministic
-  * sawtooth, encodes as real FLAC, decodes and verifies
-  * ([[FlacCodecUtil.synthRoundtrip]]). Codegen'd. */
-case class FlacProbe(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case s: StructType if s.length == 4 &&
-      s.fields.map(_.dataType).sameElements(
-        Array[DataType](LongType, IntegerType, IntegerType, IntegerType)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires struct<long,int,int,int>, got $other")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType), StructField("sample_rate", IntegerType),
-    StructField("channels", IntegerType), StructField("bits", IntegerType),
-    StructField("total_samples", LongType), StructField("sum_s", LongType),
-    StructField("min_s", LongType), StructField("max_s", LongType),
-    StructField("wsum_s", LongType), StructField("roundtrip_ok", BooleanType)))
-  override def prettyName: String = "flac_probe"
-
-  override def nullSafeEval(input: Any): Any = {
-    val r = input.asInstanceOf[InternalRow]
-    FlacCodecUtil.synthRoundtrip(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, row => s"""
-      |${ev.value} = graft.functions.FlacCodecUtil.synthRoundtrip(
-      |  $row.getLong(0), $row.getInt(1), $row.getInt(2), $row.getInt(3));
-    """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): FlacProbe =
-    copy(child = newChild)
-}
-
-/** Column-level entry points. */
+/** Column-level entry points; the `private[functions]` kernels are also
+  * the SQL functions [[GraftExtensions]] registers. */
 object MediaFunctions {
+  import Kernel.{encoder, parser}
+  private val I = IntegerType
+  private val L = LongType
+
+  private[functions] val wavEncode = encoder(MediaCodecUtil, "encodeWav", I, I, I, I, I)
+  private[functions] val wavParse = parser(MediaCodecUtil, "parseWav", "format" -> StringType,
+    "sample_rate" -> I, "channels" -> I, "bits" -> I, "n_samples" -> L)
+  private[functions] val mp4Encode = encoder(MediaCodecUtil, "encodeMp4", I, L, I)
+  private[functions] val mp4Parse = parser(MediaCodecUtil, "parseMp4", "format" -> StringType,
+    "brand" -> StringType, "timescale" -> I, "duration" -> L)
+  private val adtsEncode = encoder(MediaCodecUtil, "encodeAdts", I, I, I, I)
+  private val adtsParse = parser(MediaCodecUtil, "parseAdts", "format" -> StringType,
+    "sample_rate" -> I, "channels" -> I, "profile" -> I, "frames" -> L, "n_samples" -> L)
+  private val oggEncode = encoder(MediaCodecUtil, "encodeOggVorbis", I, I, L, I, I)
+  private val oggParse = parser(MediaCodecUtil, "parseOggVorbis", "format" -> StringType,
+    "sample_rate" -> I, "channels" -> I, "pages" -> L, "total_samples" -> L, "serial" -> L)
+  private val flacRoundtrip = Kernel(FlacCodecUtil, "synthRoundtrip", Seq(L, I, I, I),
+    Kernel.struct("format" -> StringType, "sample_rate" -> I, "channels" -> I, "bits" -> I,
+      "total_samples" -> L, "sum_s" -> L, "min_s" -> L, "max_s" -> L, "wsum_s" -> L,
+      "roundtrip_ok" -> BooleanType), mayReturnNull = false)
+
   /** Synthesize WAV bytes from (sample_rate, channels, bits, n_samples,
     * pad) int columns. */
   def audioBytes(sampleRate: Column, channels: Column, bits: Column,
                  nSamples: Column, pad: Column): Column =
-    bridge.column(AudioBytes(bridge.expression(
-      F.struct(sampleRate.cast("int"), channels.cast("int"), bits.cast("int"),
-        nSamples.cast("int"), pad.cast("int")))))
+    wavEncode(sampleRate, channels, bits, nSamples, pad)
 
-  /** Parse WAV bytes → struct(format, sample_rate, channels, bits, n_samples). */
-  def audioMeta(bytes: Column): Column =
-    bridge.column(AudioMeta(bridge.expression(bytes)))
+  /** Parse WAV bytes → struct(format, sample_rate, channels, bits,
+    * n_samples); null for unrecognizable buffers (RIFF chunk walk). */
+  def audioMeta(bytes: Column): Column = wavParse(bytes)
 
   /** Synthesize MP4 bytes from (timescale, duration, pad) columns. */
   def videoBytes(timescale: Column, duration: Column, pad: Column): Column =
-    bridge.column(VideoBytes(bridge.expression(
-      F.struct(timescale.cast("int"), duration.cast("long"), pad.cast("int")))))
+    mp4Encode(timescale, duration, pad)
 
-  /** Parse MP4 bytes → struct(format, brand, timescale, duration). */
-  def videoMeta(bytes: Column): Column =
-    bridge.column(VideoMeta(bridge.expression(bytes)))
+  /** Parse MP4 bytes → struct(format, brand, timescale, duration); null
+    * for unrecognizable buffers (ISO BMFF box walk). */
+  def videoMeta(bytes: Column): Column = mp4Parse(bytes)
 
   /** Synthesize an AAC ADTS stream from (sampling_frequency_index,
     * channels, frames, payload_len) int columns. */
   def adtsBytes(sfi: Column, channels: Column, frames: Column,
                 payloadLen: Column): Column =
-    bridge.column(AdtsBytes(bridge.expression(
-      F.struct(sfi.cast("int"), channels.cast("int"), frames.cast("int"),
-        payloadLen.cast("int")))))
+    adtsEncode(sfi, channels, frames, payloadLen)
 
   /** Parse ADTS bytes → struct(format, sample_rate, channels, profile,
-    * frames, n_samples). */
-  def adtsMeta(bytes: Column): Column =
-    bridge.column(AdtsMeta(bridge.expression(bytes)))
+    * frames, n_samples); null for non-ADTS buffers (frame walk). */
+  def adtsMeta(bytes: Column): Column = adtsParse(bytes)
 
-  /** Synthesize an Ogg Vorbis stream from (channels, sample_rate,
-    * total_samples, payload_len, serial) columns. */
+  /** Synthesize an Ogg Vorbis stream (real RFC 3533 page CRCs) from
+    * (channels, sample_rate, total_samples, payload_len, serial) columns. */
   def oggVorbisBytes(channels: Column, sampleRate: Column, totalSamples: Column,
                      payloadLen: Column, serial: Column): Column =
-    bridge.column(OggVorbisBytes(bridge.expression(
-      F.struct(channels.cast("int"), sampleRate.cast("int"),
-        totalSamples.cast("long"), payloadLen.cast("int"), serial.cast("int")))))
+    oggEncode(channels, sampleRate, totalSamples, payloadLen, serial)
 
   /** Parse Ogg Vorbis bytes → struct(format, sample_rate, channels,
-    * pages, total_samples, serial). */
-  def oggMeta(bytes: Column): Column =
-    bridge.column(OggMeta(bridge.expression(bytes)))
+    * pages, total_samples, serial); null for non-Ogg buffers or any page
+    * CRC mismatch (page walk). */
+  def oggMeta(bytes: Column): Column = oggParse(bytes)
 
   /** FLAC encode→decode roundtrip probe over the deterministic sawtooth
-    * (seed, n, step, rate). */
+    * (seed, n, step, rate) → struct(format, sample_rate, channels, bits,
+    * total_samples, sum_s, min_s, max_s, wsum_s, roundtrip_ok); see
+    * [[FlacCodecUtil.synthRoundtrip]]. */
   def flacProbe(seed: Column, n: Column, step: Column, rate: Column): Column =
-    bridge.column(FlacProbe(bridge.expression(
-      F.struct(seed.cast("long"), n.cast("int"), step.cast("int"), rate.cast("int")))))
+    flacRoundtrip(seed, n, step, rate)
 }

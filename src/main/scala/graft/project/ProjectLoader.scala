@@ -93,14 +93,7 @@ object ProjectLoader {
       }
 
       registerDatasource(spark, md.datasource)
-      // a declared row schema (DDL in the model config) generates the
-      // validation rules — B20's SchemaValidation, project-wired: the
-      // declaration drives the valid/invalid split and error threshold
-      val validations = md.config.get("schema").map(ddl =>
-        graft.model.SchemaValidation.rules(
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))).getOrElse(Nil)
-      val model = Model.fromSql(md.id, md.sql, keyCols = md.keys, cursorCol = md.cursor, env = env)
-        .copy(validations = validations)
+      val model = modelOf(md)
       val runner = new SyncRunner(store)
       val checkpointEvery = sync.options.get("checkpointEvery").collect {
         case n: Long => n
@@ -195,8 +188,7 @@ object ProjectLoader {
                  fullRefresh: Boolean = false): SyncPlan = {
       val (sync, md, conn) = resolve(syncId)
       registerDatasource(spark, md.datasource)
-      val model = Model.fromSql(md.id, md.sql, keyCols = md.keys,
-        cursorCol = md.cursor, env = env)
+      val model = modelOf(md)
       val (lastCursor, increment) =
         new SyncRunner(store).increment(spark, model, syncId, fullRefresh)
       val rows = increment.count()
@@ -217,8 +209,7 @@ object ProjectLoader {
       if (!graft.sinks.Destinations.registry.contains(conn.kind)) Nil
       else {
         registerDatasource(spark, md.datasource)
-        val model = Model.fromSql(md.id, md.sql, keyCols = md.keys,
-          cursorCol = md.cursor, env = env)
+        val model = modelOf(md)
         val stream = sync.options.get("stream").collect { case s: String => s }
         graft.sinks.Destinations.modelFit(model.preview(spark, 0).schema, conn.kind, stream)
       }
@@ -233,8 +224,19 @@ object ProjectLoader {
       val md = models.getOrElse(modelId,
         throw new IllegalArgumentException(s"Model $modelId not found in $dir"))
       registerDatasource(spark, md.datasource)
+      modelOf(md).preview(spark, n)
+    }
+
+    /** The model `md` declares. A declared row schema (DDL in the model
+      * config) generates its validation rules — B20's SchemaValidation,
+      * project-wired: the declaration drives the valid/invalid split and
+      * error threshold of a sync run. */
+    private def modelOf(md: ModelDef): Model = {
+      val validations = md.config.get("schema").map(ddl =>
+        graft.model.SchemaValidation.rules(
+          org.apache.spark.sql.types.StructType.fromDDL(ddl))).getOrElse(Nil)
       Model.fromSql(md.id, md.sql, keyCols = md.keys, cursorCol = md.cursor, env = env)
-        .preview(spark, n)
+        .copy(validations = validations)
     }
 
     private def resolve(syncId: String): (SyncDef, ModelDef, ConnectionDef) = {
@@ -282,11 +284,7 @@ object ProjectLoader {
         .getOrElse(throw new IllegalArgumentException(
           s"continuous sync '$syncId' must declare streamTable (sync options or model config)"))
       registerDatasource(spark, md.datasource, streamTable = Some(streamTable))
-      val validations = md.config.get("schema").map(ddl =>
-        graft.model.SchemaValidation.rules(
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))).getOrElse(Nil)
-      val model = Model.fromSql(md.id, md.sql, keyCols = md.keys, cursorCol = None, env = env)
-        .copy(validations = validations)
+      val model = modelOf(md) // no cursor: required above
       new SyncRunner(store).runContinuous(
         model.build(spark), model, syncId, checkpointDir,
         // the stream checkpoint is the position, so a continuous run

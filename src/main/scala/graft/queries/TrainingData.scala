@@ -872,7 +872,7 @@ object TrainingData {
     * PNG/JPEG/GIF bytes are assembled (deterministic geometry from
     * doc_id/n_chars; JPEG gets a doc-dependent variable-length COM
     * segment) and parsed BACK by the codegen'd marker-walking
-    * [[graft.functions.ImageMeta]]. The oracle predicts the recovered
+    * [[graft.functions.ImageFunctions.imageMeta]]. The oracle predicts the recovered
     * metadata arithmetically and re-builds the JPEG/GIF bytes (and the
     * CRC-free PNG prefix) hex-wise in SQL, so both the encoder's byte
     * layout and the parser's walk are value-gated end to end. */
@@ -903,7 +903,7 @@ object TrainingData {
     * complete PCM container (variable-length LIST/INFO comment chunk
     * ahead of `fmt `, deterministic geometry from doc_id/n_chars) is
     * assembled and chunk-walked BACK by the codegen'd
-    * [[graft.functions.AudioMeta]]. RIFF carries no checksum, so the
+    * [[graft.functions.MediaFunctions.audioMeta]]. RIFF carries no checksum, so the
     * oracle re-builds the ENTIRE byte stream hex-wise in SQL — encoder
     * layout and parser walk are value-gated end to end. */
   def q131AudioMeta(t: Tables): DataFrame = {
@@ -932,7 +932,7 @@ object TrainingData {
     * ADTS stream (7-byte headers, protection_absent, AAC-LC, id-derived
     * sampling-frequency index/channel config/frame count/payload size) is
     * assembled and frame-walked BACK by the codegen'd
-    * [[graft.functions.AdtsMeta]]: syncwords, 13-bit frame lengths,
+    * [[graft.functions.MediaFunctions.adtsMeta]]: syncwords, 13-bit frame lengths,
     * config consistency across frames, 1024 samples per raw_data_block.
     * protection_absent means no CRC anywhere, so the oracle re-builds the
     * ENTIRE stream hex-wise in SQL — the byte gate is total. The
@@ -961,7 +961,7 @@ object TrainingData {
     * two-page Ogg stream (BOS page carrying the genuine 30-byte Vorbis
     * identification header, EOS page whose granule position is the PCM
     * sample total, real RFC 3533 page CRCs) is assembled and page-walked
-    * BACK by the codegen'd [[graft.functions.OggMeta]], which verifies
+    * BACK by the codegen'd [[graft.functions.MediaFunctions.oggMeta]], which verifies
     * every page's capture pattern, lacing-table sizing and checksum. The
     * CRC keeps the byte stream out of SQL reach (unlike ADTS/WAV/MP4), so
     * the oracle gates the PARSED metadata arithmetically and the spec
@@ -1017,7 +1017,7 @@ object TrainingData {
 
   /** C12 (video): REAL MP4/ISO-BMFF round-trip — per doc, `ftyp` +
     * variable-length `free` + `moov`/`mvhd` bytes are assembled and
-    * box-walked BACK by the codegen'd [[graft.functions.VideoMeta]].
+    * box-walked BACK by the codegen'd [[graft.functions.MediaFunctions.videoMeta]].
     * No checksum in ISO BMFF either: the oracle re-builds the entire
     * container hex-wise in SQL. */
   def q132VideoMeta(t: Tables): DataFrame = {

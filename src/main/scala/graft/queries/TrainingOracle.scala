@@ -1041,7 +1041,7 @@ object TrainingOracle {
        |WHERE jaccard >= 0.7 ORDER BY doc_a, doc_b""".stripMargin
 
   // C12: predicted round-trip of the image-container codecs — the same
-  // geometry arithmetic the Spark plan feeds graft.functions.ImageBytes,
+  // geometry arithmetic the Spark plan feeds graft.functions.ImageFunctions.imageBytes,
   // plus a hex-wise SQL re-construction of the JPEG/JFIF and GIF89a byte
   // layouts (ISO 10918 marker segments / GIF logical-screen descriptor)
   // and of the PNG signature+IHDR prefix (RFC 2083; CRC-32 excluded —
@@ -1091,7 +1091,7 @@ object TrainingOracle {
       |""".stripMargin
 
   // C12 (audio): predicted WAV/RIFF round-trip — the same geometry
-  // arithmetic the Spark plan feeds graft.functions.AudioBytes, plus a
+  // arithmetic the Spark plan feeds graft.functions.MediaFunctions.audioBytes, plus a
   // hex-wise SQL re-construction of the ENTIRE RIFF byte stream
   // (RIFF 1.0: LIST/INFO/ICMT comment chunk, canonical 16-byte `fmt `,
   // zeroed PCM `data`, word-alignment pads — no checksum anywhere, so

@@ -1403,12 +1403,12 @@ object EventStreams {
     * once per batch; the destination callback is at-least-once, same
     * contract as
     * [[graft.sync.SyncRunner.runContinuous]]. State read per batch is
-    * one pointer + one 1-row cum count; index probe cost is the C27
-    * contract (index bytes, not corpus bytes).
+    * the latest prior batch's 1-row cum count (the done-marker is the
+    * only commit, so a replay never reads its own); index probe cost is
+    * the C27 contract (index bytes, not corpus bytes).
     *
     * Layout under `root`: `index/{bands,sets}/v<id>`, `matches/v<id>`,
-    * `rejects/v<id>`, `shards/v<id>`, `state/v<id>` + pointer,
-    * `_done_v<id>`. */
+    * `rejects/v<id>`, `shards/v<id>`, `state/v<id>`, `_done_v<id>`. */
   def curationSync(docs: DataFrame, docSchema: org.apache.spark.sql.types.StructType,
                    root: String, checkpointDir: String,
                    shardTokens: Long = 2000L, threshold: Double = 0.7,
@@ -1444,19 +1444,19 @@ object EventStreams {
         val (nb, ns) = graft.operators.Dedup.bandIndex(kept, textCol = textCol, idCol = idCol)
         nb.write.mode("overwrite").parquet(s"$root/index/bands/v$batchId")
         ns.write.mode("overwrite").parquet(s"$root/index/sets/v$batchId")
-        // D22: pack survivors onto the global token axis
-        val stateRoot = s"$root/state"
-        val prev = readPointer(spark, stateRoot)
-        val offset = prev.map(p => spark.read.parquet(p)
-          .select(col("cum_tokens")).head().getLong(0)).getOrElse(0L)
+        // D22: pack survivors onto the global token axis, starting at the
+        // cum count of the latest prior batch — never this batch's own
+        // `state/v<id>`, which a crashed first attempt may have left
+        val offset = priorSlices("state")
+          .maxByOption(p => new org.apache.hadoop.fs.Path(p).getName.drop(1).toLong)
+          .fold(0L)(p => spark.read.parquet(p).select(col("cum_tokens")).head().getLong(0))
         val withTok = kept.withColumn("__ntok",
           size(graft.operators.TextOps.tokens(col(textCol))).cast("long"))
         val placed = placeBatchOnAxis(withTok, offset, shardTokens, idCol, "__ntok")
         placed.write.mode("overwrite").parquet(s"$root/shards/v$batchId")
         val newCum = offset + spark.read.parquet(s"$root/shards/v$batchId")
           .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
-        writeCumState(spark, s"$stateRoot/v$batchId", newCum)
-        writePointer(spark, stateRoot, batchId, s"$stateRoot/v$batchId")
+        writeCumState(spark, s"$root/state/v$batchId", newCum)
         // destination: curated rows + their placement, per-batch profile
         sink(kept.join(spark.read.parquet(s"$root/shards/v$batchId"), idCol), batchId)
         val Seq(nIn, nValid, nKept) = Seq(df, valid, kept).map(_.count())

@@ -141,6 +141,29 @@ class NativeExpressionsSpec extends SparkSuite {
     assert(mp4 == (("mp4", 90000, 4500L)))
   }
 
+  test("media and image kernels: interpreted and generated code give the same rows") {
+    import graft.queries.TrainingData._
+    val dir = java.nio.file.Files.createTempDirectory("graft-media-docs").toString
+    spark.range(1, 201).select(col("id").as("doc_id"), (col("id") * 37 % 1000 + 1).as("n_chars"))
+      .write.parquet(s"$dir/documents.parquet")
+    val t = graft.queries.Tables(spark, dir)
+    val queries = Seq(q130ImageMeta _, q131AudioMeta _, q132VideoMeta _,
+      q176AdtsMeta _, q177OggMeta _, q180FlacRoundtrip _)
+    def rows(factoryMode: String, wholeStage: String): Seq[Seq[org.apache.spark.sql.Row]] = {
+      val confs = Seq("spark.sql.codegen.factoryMode" -> factoryMode,
+        "spark.sql.codegen.wholeStage" -> wholeStage)
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try queries.map(q => q(t).collect().toSeq)
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val generated = rows("CODEGEN_ONLY", "true")
+    assert(generated.forall(_.length == 200))
+    assert(rows("NO_CODEGEN", "false") == generated)
+    assert(spark.sql("SELECT audio_meta(NULL) AS m").head().isNullAt(0))
+    assert(spark.sql("SELECT image_meta(X'010203') AS m").head().isNullAt(0))
+  }
+
   test("Sampling.pctBucket stays in [0,100) and spreads") {
     val buckets = spark.range(0, 1000)
       .select(graft.operators.Sampling.pctBucket(col("id")).as("b")).as[Long].collect()

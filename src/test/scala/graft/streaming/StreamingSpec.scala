@@ -581,6 +581,47 @@ class StreamingSpec extends SparkSuite {
       s"must not leak in via the batch's own crashed slice; got $got")
   }
 
+  test("curation crash-replay: a batch whose cum state landed but whose done-marker " +
+       "didn't places its survivors from the prior batch's offset") {
+    import org.apache.spark.sql.types._
+    val in = Files.createTempDirectory("graft-curate2-in").toString
+    val root = Files.createTempDirectory("graft-curate2-root").toString
+    val ckpt = Files.createTempDirectory("graft-curate2-ckpt").toString
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = false)))
+    def runOnce(): Unit = EventStreams.curationSync(
+      spark.readStream.schema(schema).parquet(in), schema, root, ckpt,
+      shardTokens = 50L)((_, _) => ())
+    def shards() = spark.read.option("recursiveFileLookup", "true").parquet(s"$root/shards")
+      .select("doc_id", "token_offset", "n_tokens").as[(Long, Long, Long)].collect().toSeq
+
+    Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2L, "one two three four five six seven eight nine ten eleven"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
+    runOnce() // batchId 0
+    val w1tokens = shards().map(_._3).sum
+
+    // wave 2 (batchId 1): simulate a first attempt that crashed after it
+    // wrote its cum state and flipped a pointer to it, before `_done_v1`
+    val wave2 = Seq((10L, "red orange yellow green blue indigo violet"),
+                    (11L, "north south east west up down left right in out"))
+      .toDF("doc_id", "text")
+    val w2tokens = wave2.select(sum(size(graft.operators.TextOps.tokens(col("text")))))
+      .head().getLong(0)
+    Seq(w1tokens + w2tokens).toDF("cum_tokens").write.mode("overwrite").parquet(s"$root/state/v1")
+    Files.write(java.nio.file.Paths.get(root, "state", "_latest_v1"), s"$root/state/v1".getBytes)
+    wave2.coalesce(1).write.mode("append").parquet(in)
+    runOnce() // replayed batchId 1
+
+    val got = shards()
+    assert(got.filter(_._1 >= 10L).map(_._2).min == w1tokens,
+      s"wave 2 starts right after wave 1's $w1tokens tokens, not past its own crashed cum; got $got")
+    assert(got.map(o => (o._2, o._2 + o._3)).sorted.sliding(2).forall {
+      case Seq((_, e), (s, _)) => s == e; case _ => true
+    } && got.map(_._2).min == 0L, s"token prefixes tile the axis with no gaps; got $got")
+  }
+
   test("D12 crash-publish: a partial pointer tmp file never hides the previous version") {
     val in = Files.createTempDirectory("graft-sketch2-in").toString
     val state = Files.createTempDirectory("graft-sketch2-state").toString
