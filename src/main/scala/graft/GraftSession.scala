@@ -5,16 +5,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /**
  * Session factory for the graft engine.
  *
- * Defaults are tuned for the test harness (local[32], 128 GiB) but every
- * knob is chosen for cluster semantics: AQE handles runtime coalescing and
- * skew joins, the broadcast threshold keeps dimension joins shuffle-free,
- * and shuffle partitions scale with the session's core count rather than
- * Spark's static 200 default.
+ * Every knob is chosen for cluster semantics: AQE handles runtime
+ * coalescing and skew joins, the broadcast threshold keeps dimension joins
+ * shuffle-free, and shuffle partitions scale with the session's core count
+ * rather than Spark's static 200 default.
  */
 object GraftSession {
 
   /** Build a local session; `cpus` drives parallelism-dependent confs. */
-  def local(cpus: Int = 32, appName: String = "graft"): SparkSession =
+  def local(cpus: Int, appName: String = "graft"): SparkSession =
     tune(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .withExtensions(new graft.functions.GraftExtensions)
       .appName(appName).getOrCreate()

@@ -115,12 +115,12 @@ object Associations {
     // cut, every reference re-runs that window (measured 2.7x over
     // linear at 16x corpus in the scale probe). LAZY persist, not an
     // eager localCheckpoint (ADVICE r10): building the plan must not
-    // launch a job if the result is never acted on, the cache must be
-    // reclaimable by the ContextCleaner once the frame is dereferenced
-    // (eager localCheckpoint blocks accumulate across repeated calls in
-    // one session), and a persisted lineage survives executor loss —
-    // unlike Rank.scala's iterative chains, there is no growing-lineage
-    // problem here that would justify truncation.
+    // launch a job if the result is never acted on, and a persisted
+    // lineage survives executor loss — unlike Rank.scala's iterative
+    // chains, there is no growing-lineage problem here that would justify
+    // truncation. Nothing unpersists it: the session's CacheManager keeps
+    // the entry until `unpersist` (the ContextCleaner does not reclaim
+    // it), and a later call with the same plan reads it.
     val si0 = events.select(col(sessionCol).as("session"), col(itemCol).as("item"),
         col(tsCol).cast("long").as("ts"))
       .groupBy("session", "item")

@@ -1037,9 +1037,10 @@ object Dedup {
     // min — the dominant cost, ~7 s of a 22 s sf0.1 run) is referenced
     // THREE times below (the df aggregate + both self-join sides), and
     // Spark materializes each branch separately without it (measured 3×
-    // the fingerprint job in one q220 execution). Cache is
-    // ContextCleaner-reclaimed once the frame is dereferenced; ~2N/w
-    // rows of (id, fp) — KBs per thousand docs.
+    // the fingerprint job in one q220 execution). ~2N/w rows of (id, fp)
+    // — KBs per thousand docs. Nothing unpersists it: the session's
+    // CacheManager keeps the entry until `unpersist` (the ContextCleaner
+    // does not reclaim it), and a later call with the same plan reads it.
     val byFp = winnowFingerprints(docs, k, w, textCol, idCol).persist()
     val keep = byFp.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDocFreq).select("fp")

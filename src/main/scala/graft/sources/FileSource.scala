@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Lineage.LineageOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -73,13 +74,14 @@ object FileSource {
     spark.read.schema(schema).orc(path)
 
   /** Split a PERMISSIVE read into (good rows, dead-letter rows). The
-    * parsed frame is cached first: Spark disallows querying a raw file
+    * parsed frame is cut first: Spark disallows querying a raw file
     * through only its corrupt-record column (QUERY_ONLY_CORRUPT_RECORD_
-    * COLUMN), and the split consumes the parse twice anyway — cache once,
-    * parse once. Callers unpersist via the returned frames' sparkSession
-    * when the sync finishes. */
+    * COLUMN), and the split consumes the parse twice anyway — parse once.
+    * The cut is eager and private to this split: a session cache entry
+    * would be plan-matched by every later read of the same path and
+    * schema, which would then miss files added since. */
   def splitCorrupt(df: DataFrame): (DataFrame, DataFrame) = {
-    val parsed = df.cache()
+    val parsed = df.cut()
     val bad = parsed.filter(parsed.col(CorruptCol).isNotNull)
     val good = parsed.filter(parsed.col(CorruptCol).isNull).drop(CorruptCol)
     (good, bad)

@@ -32,6 +32,22 @@ class FileSourceSpec extends SparkSuite {
     assert(good.columns.toSeq == Seq("id", "email", "score"))
   }
 
+  test("splitCorrupt leaves no session cache entry: a later read of the path sees new files") {
+    val dir = Files.createTempDirectory("graft-src").toString
+    write(dir, "a.ndjson", Seq(
+      """{"id": 1, "email": "a@b.c", "score": 0.5}""",
+      """{"id": 2, "email": "x@y.z", "score": 1.0}""",
+      """not json at all"""))
+    val (good, bad) = FileSource.splitCorrupt(FileSource.ndjson(spark, dir, schema))
+    assert(good.count() == 2 && bad.count() == 1)
+    write(dir, "b.ndjson", Seq("""{"id": 3, "email": "q@r.s", "score": 1.5}"""))
+    val (good2, bad2) = FileSource.splitCorrupt(FileSource.ndjson(spark, dir, schema))
+    assert(good2.count() == 3, "the second split must see the added file")
+    assert(bad2.count() == 1)
+    assert(FileSource.ndjson(spark, dir, schema).count() == 4,
+      "a plain read must not be served the first split's rows")
+  }
+
   test("replayDeadLetters: a widened schema recovers quarantined rows; residue stays dead") {
     val dir = Files.createTempDirectory("graft-src").toString
     // id arrives as a string in some rows — dead under BIGINT, fine under STRING

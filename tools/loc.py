@@ -65,6 +65,9 @@ def in_worktree():
 
 
 def main():
+    if any(a in ("-h", "--help") for a in sys.argv[1:]):
+        print(__doc__.strip())
+        return
     rev = sys.argv[1] if len(sys.argv) > 1 else "HEAD"
     before, after = at_rev(rev), in_worktree()
     for name in sorted(set(before) | set(after)):
