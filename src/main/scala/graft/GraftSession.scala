@@ -40,6 +40,14 @@ object GraftSession {
     // across queries too). 4096 entries holds the whole catalog's units;
     // the code cache itself is already sized (ReservedCodeCacheSize=2g).
     .config("spark.sql.codegen.cache.maxEntries", "4096")
+    // That cache is keyed by (task context classloader, code). With
+    // artifact isolation on (the Spark 4 default), every writeStream.start()
+    // runs in a cloned session with a fresh UUID, so its executor tasks get
+    // a fresh classloader and recompile the whole batch plan: 9 janino
+    // compiles per SyncRunner.runContinuous, every time. graft adds no
+    // session artifacts (no addArtifact or addJar), so isolation buys
+    // nothing here; off, a restarted stream reuses its earlier code.
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.ui.enabled", "false")
 
   /** Read one of the warehouse tables under `sfDir` with its on-disk schema. */

@@ -3,6 +3,8 @@ package graft.sync
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.json4s.{JBool, JLong, JNull, JObject, JString}
+import org.json4s.jackson.JsonMethods
 import graft.model.Model
 import graft.operators.Diff
 import graft.state.StateStore
@@ -133,10 +135,11 @@ final class SyncRunner(store: StateStore, threshold: ErrorThreshold = ErrorThres
   private def recordRun(r: SyncReport): Unit = {
     val prefix = Seq(s"syncId=${r.syncId}", "$runs")
     val seq = store.size(prefix)
-    store.set(prefix :+ seq.toString,
-      s"""{"rowsIn":${r.rowsIn},"rowsValid":${r.rowsValid},"rowsInvalid":${r.rowsInvalid},""" +
-      s""""newCursor":${r.newCursor.map(c => "\"" + c + "\"").getOrElse("null")},""" +
-      s""""incremental":${r.incremental},"chunks":${r.chunks}}""")
+    store.set(prefix :+ seq.toString, JsonMethods.compact(JObject(
+      "rowsIn" -> JLong(r.rowsIn), "rowsValid" -> JLong(r.rowsValid),
+      "rowsInvalid" -> JLong(r.rowsInvalid),
+      "newCursor" -> r.newCursor.map(JString(_)).getOrElse(JNull),
+      "incremental" -> JBool(r.incremental), "chunks" -> JLong(r.chunks))))
   }
 
   /** Recorded run reports for one sync, oldest first: (seq, report json). */

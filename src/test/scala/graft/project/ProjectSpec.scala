@@ -4,6 +4,7 @@ import graft.SparkSuite
 import graft.sinks.RestSink
 import graft.state.StateStore
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Recording transport: static state, so the shipped closure carries no
   * outer spec reference (local[n] still serializes task closures). */
@@ -17,6 +18,16 @@ object ProjectSpecRecorder {
       ProjectSpecRecorder.synchronized { batchSizes += batch.size; () }
     def batches: Seq[Int] = ProjectSpecRecorder.synchronized { batchSizes.toSeq }
     def rows: Long = batches.map(_.toLong).sum
+  }
+
+  private val keyBuf = mutable.Buffer.empty[String]
+
+  /** Records the `o_orderkey` of every delivered row. */
+  final class KeyRecorder extends RestSink.Transport {
+    ProjectSpecRecorder.synchronized { keyBuf.clear() }
+    override def send(batch: Seq[Map[String, Any]]): Unit =
+      ProjectSpecRecorder.synchronized { batch.foreach(r => keyBuf += String.valueOf(r("o_orderkey"))) }
+    def keys: Seq[String] = ProjectSpecRecorder.synchronized { keyBuf.toSeq }
   }
 }
 
@@ -60,7 +71,7 @@ class ProjectSpec extends SparkSuite {
     dir
   }
 
-  import ProjectSpecRecorder.Recorder
+  import ProjectSpecRecorder.{KeyRecorder, Recorder}
 
   test("yaml subset: nesting, lists, scalars, quoting") {
     val y = Yaml.parse(
@@ -290,6 +301,56 @@ class ProjectSpec extends SparkSuite {
     val replay = proj.runContinuous(spark, "continuous", store, rec3,
       Files.createTempDirectory("graft-cont-ckpt2").toString)
     assert(replay.isEmpty && rec3.rows == 0, "marker-present batches skip the sink entirely")
+  }
+
+  test("runContinuous: a restarted stream reuses its compiled code and delivers only the new file") {
+    import org.apache.spark.sql.functions._
+    // a writable copy of the datasource, with orders as a directory that
+    // new files land in
+    val ds = Files.createTempDirectory("graft-cont-ds")
+    Files.createDirectories(ds.resolve("orders.parquet"))
+    Files.copy(Paths.get(s"$sfDir/orders.parquet"), ds.resolve("orders.parquet/base.parquet"))
+    /** Land 40 re-keyed orders as one new parquet file; its keys. */
+    def land(i: Int): Set[String] = {
+      val staging = Files.createTempDirectory("graft-cont-land").resolve("out")
+      spark.read.parquet(s"$sfDir/orders.parquet").limit(40)
+        .withColumn("o_orderkey", col("o_orderkey") + 1000000L * (i + 1))
+        .coalesce(1).write.parquet(staging.toString)
+      val st = Files.list(staging)
+      val part = try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq.head
+        finally st.close()
+      val dest = ds.resolve(s"orders.parquet/inc-$i.parquet")
+      Files.move(part, dest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      spark.read.parquet(dest.toString).select("o_orderkey").collect().map(r => String.valueOf(r.get(0))).toSet
+    }
+    val dir = makeProject()
+    write(dir, "models/orders_stream.sql",
+      s"""--{{ config "datasource" env.WAREHOUSE }}
+         |SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+         |""".stripMargin)
+    write(dir, "syncs/continuous.yaml",
+      "model: orders_stream\ndestination: fb\noptions:\n  streamTable: orders\n")
+    val proj = ProjectLoader.load(dir, baseEnv = Map("WAREHOUSE" -> s"parquet:$ds"))
+    val store = StateStore.inMemory()
+    val ckpt = Files.createTempDirectory("graft-cont-reuse-ckpt").toString
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    val baseRows = spark.read.parquet(s"$sfDir/orders.parquet").count()
+    land(0)
+    val rec1 = new KeyRecorder
+    proj.runContinuous(spark, "continuous", store, rec1, ckpt)
+    assert(rec1.keys.size == baseRows + 40, "first start delivers the base file and the first increment")
+    land(1)
+    proj.runContinuous(spark, "continuous", store, new KeyRecorder, ckpt)
+    val newKeys = land(2)
+    val rec3 = new KeyRecorder
+    val before = compiles
+    proj.runContinuous(spark, "continuous", store, rec3, ckpt)
+    val compiled = compiles - before
+    assert(rec3.keys.size == newKeys.size && rec3.keys.toSet == newKeys,
+      s"third start delivered ${rec3.keys.size} rows, the new file has ${newKeys.size}")
+    assert(compiled == 0,
+      s"third start compiled $compiled classes: a restarted stream must reuse its earlier starts' code")
   }
 
   test("continuous curation sync: validate → near-dup probe → shard assign → destination, with replay") {

@@ -361,6 +361,31 @@ class StreamingSpec extends SparkSuite {
     assert(again == Map("view" -> 3L, "click" -> 2L), s"got $again")
   }
 
+  test("D14: a restarted aggMaintenance stream reuses the code its earlier starts compiled") {
+    val in = Files.createTempDirectory("graft-agg-reuse-in").toString
+    val state = Files.createTempDirectory("graft-agg-reuse-state").toString
+    val ckpt = Files.createTempDirectory("graft-agg-reuse-ckpt").toString
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def push(id: Long): Unit = Seq((id, ts(id.toDouble), id, "view", 1.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+      .coalesce(1).write.mode("append").parquet(in)
+    def runOnce(): Unit = EventStreams.aggMaintenance(
+      EventStreams.readEvents(spark, in), Seq("event_type"), "value", state, ckpt)
+
+    // the state's decimal sum widens from (28,2) to its (38,2) cap at the
+    // first merge, so the third start still plans a new merge; the fourth
+    // is the first to repeat an earlier start's plan
+    (1 to 3).foreach { id => push(id); runOnce() }
+    push(4)
+    val before = compiles
+    runOnce()
+    val compiled = compiles - before
+    val out = EventStreams.aggReadout(spark, state, Seq("event_type"))
+      .select("event_type", "n_rows").as[(String, Long)].collect().toMap
+    assert(out == Map("view" -> 4L), s"got $out")
+    assert(compiled == 0, s"fourth start compiled $compiled classes")
+  }
+
   test("D18: streaming expectations monitor — per-batch quality reports, replay-safe") {
     import graft.model.Expectations._
     val in = Files.createTempDirectory("graft-exp-in").toString

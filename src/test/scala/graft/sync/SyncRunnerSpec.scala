@@ -112,6 +112,93 @@ class SyncRunnerSpec extends SparkSuite {
     assert(firstRun.size + resumed.size == total, "every row delivered exactly once across the crash")
   }
 
+  /** A store whose `crashAt`-th `$lastCursor` write (0-based) throws: the
+    * process died after a chunk's sink returned, before its checkpoint. */
+  private final class CursorCrashStore(inner: StateStore, crashAt: Int) extends StateStore {
+    private var cursorWrites = 0
+    override def get(key: Seq[String]): Option[String] = inner.get(key)
+    override def set(key: Seq[String], value: String): Unit = {
+      if (key.last == "$lastCursor") {
+        if (cursorWrites == crashAt) throw new java.io.IOException("state store lost mid-run")
+        cursorWrites += 1
+      }
+      inner.set(key, value)
+    }
+    override def del(key: Seq[String]): Unit = inner.del(key)
+    override def list(prefix: Seq[String]): Seq[(Seq[String], String)] = inner.list(prefix)
+    override def deleteByPrefix(prefix: Seq[String]): Int = inner.deleteByPrefix(prefix)
+  }
+
+  /** One crash of a chunked run: chunk `chunk` (0-based) dies either in the
+    * sink after `part` of its keys reached the destination, or in its
+    * `$lastCursor` write after the sink returned. */
+  private final case class Crash(every: Long, chunk: Int, inSink: Boolean, part: Double)
+
+  test("crash-resume property: a chunked run killed anywhere loses no key and re-delivers one chunk at most") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val all = spark.read.parquet(s"$sfDir/orders.parquet").select("o_orderkey").as[Long].collect().toSet
+    val total = all.size.toLong
+    // every in [total/6, total/3] plans 3-6 chunks, so chunks 0-2 always exist
+    val crashGen = for {
+      every <- Gen.choose(total / 6, total / 3)
+      chunk <- Gen.choose(0, 2)
+      inSink <- Gen.oneOf(true, false)
+      part <- Gen.choose(0.0, 1.0)
+    } yield Crash(every, chunk, inSink, part)
+    val cases = (0 until 8).flatMap(i => crashGen(Gen.Parameters.default, Seed(1400L + i)))
+    assert(cases.size == 8 && cases.exists(_.inSink) && cases.exists(!_.inSink))
+
+    cases.zipWithIndex.foreach { case (c, i) =>
+      val store = StateStore.inMemory()
+      val syncId = s"prop$i"
+      val firstRun = ArrayBuffer.empty[Set[Long]] // the keys each chunk delivered
+      def crashingSink(df: DataFrame): Unit = {
+        val keys = df.select("o_orderkey").as[Long].collect()
+        if (c.inSink && firstRun.size == c.chunk) {
+          firstRun += keys.take((keys.length * c.part).toInt).toSet
+          throw new RuntimeException("destination lost mid-chunk")
+        }
+        firstRun += keys.toSet
+      }
+      val crashStore = if (c.inSink) store else new CursorCrashStore(store, c.chunk)
+      intercept[Exception] {
+        new SyncRunner(crashStore).run(spark, ordersModel(), syncId, crashingSink,
+          checkpointEvery = Some(c.every))
+      }
+      assert(firstRun.size == c.chunk + 1, s"$c: the run died in chunk ${c.chunk}")
+
+      val resumed = ArrayBuffer.empty[Long]
+      new SyncRunner(store).run(spark, ordersModel(), syncId,
+        df => { resumed ++= df.select("o_orderkey").as[Long].collect(); () },
+        checkpointEvery = Some(c.every))
+      val delivered = firstRun.flatten.toSet
+      assert(delivered ++ resumed == all, s"$c: ${(all -- delivered -- resumed).size} keys lost")
+      assert(resumed.size == resumed.toSet.size, s"$c: the resumed run delivered a key twice")
+      val again = resumed.toSet.intersect(delivered)
+      assert(again.subsetOf(firstRun(c.chunk)),
+        s"$c: ${(again -- firstRun(c.chunk)).size} re-delivered keys come from chunks the run had checkpointed")
+    }
+  }
+
+  test("run history: a cursor holding a quote and a backslash leaves a parseable $runs record") {
+    import org.json4s._
+    val cursor = "a\"b\\c"
+    val m = Model(
+      name = "quoted",
+      build = s => Seq((1L, "a"), (2L, cursor)).toDF("id", "c"),
+      keyCols = Seq("id"),
+      cursorCol = Some("c"))
+    val runner = new SyncRunner(StateStore.inMemory())
+    val rep = runner.run(spark, m, "esc", df => { df.count(); () })
+    assert(rep.newCursor.contains(cursor))
+    val Seq((_, record)) = runner.runHistory("esc")
+    val parsed = scala.util.Try(org.json4s.jackson.JsonMethods.parse(record))
+    assert(parsed.isSuccess, s"unparseable run record: $record")
+    assert(parsed.get \ "newCursor" == JString(cursor))
+    assert(parsed.get \ "rowsIn" == JInt(2))
+  }
+
   test("chunked planning stays driver-bounded with a near-unique cursor") {
     // the reference's canonical cursor is a timestamp — near-unique per
     // row. Chunk planning must collect ~n/every bounds, NOT the full
