@@ -262,97 +262,27 @@ object Dedup {
     * but keeping one canonical doc per duplicate GROUP needs the
     * transitive closure (a~b, b~c → one cluster {a,b,c}, keep min id).
     *
-    * Spark-first iteration: symmetric edge frame + min-label propagation
-    * (label(x) ← min(label(x), min label of neighbors)) until a fixpoint.
-    * Each round is one shuffle join + partial-agg min; rounds needed =
-    * cluster diameter, and near-dup clusters are shallow (pairs share a
-    * common near-identical core), so 3–5 rounds close real corpora.
-    * `localCheckpoint` truncates lineage each round — an iterative
-    * algorithm's plan otherwise grows unboundedly. The driver loop only
-    * reads ONE scalar (changed-count) per round; labels never collect.
+    * Runs the one connected-components kernel ([[Graph.hookAndJump]]
+    * under [[Graph.settled]], the round [[Graph.components]] runs) to its
+    * fixed point: each round is a neighbor-min join and aggregate plus a
+    * pointer hop, so a label's reach at least doubles per round and a
+    * chain of n ids in order closes in about log2(n) rounds. Ids need only
+    * an ordering (strings work). `localCheckpoint` truncates lineage each
+    * round, and the driver reads one `isEmpty` per round; labels never
+    * collect. A pair set that needs more than `maxIter` rounds fails
+    * loudly rather than returning partial clusters.
     * Output: (doc_id, cluster_id = min doc id in the component) for every
     * doc that appears in some pair. */
   def resolveClusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                       maxIter: Int = 20): DataFrame = {
-    // symmetrize in ONE pass: the union form evaluated the caller's pair
-    // plan once per branch, and the pair generators feeding this
+    // symmetrized in ONE pass: the pair generators feeding this
     // (ngramJaccardPairs' inverted-index self-join behind q74/q174) are
     // the expensive half of the whole query
-    val edges = pairs.select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+    val und = Graph.symmetrize(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
       .distinct().cut()
-    // each round's frame: (node, label before the round, next label)
-    val init = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"), col("node").as("next")).cut()
-    val last = Lineage.converge(init, maxIter,
-        s"cluster resolution did not converge in $maxIter rounds") { round =>
-      val labels = round.prev.select(col("node"), col("next").as("label"))
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(min(col("label")).as("nmin"))
-      labels.join(neighborMin, Seq("node"), "left_outer")
-        .select(col("node"), col("label"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("next"))
-    } { (_, next) => next.filter(col("next") < col("label")).count() == 0L }
-    last.select(col("node").as("doc_id"), col("next").as("cluster_id"))
-  }
-
-  /** C26 (scale alternative): large-star / small-star connected
-    * components — the published MapReduce CC formulation (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014) that
-    * converges in O(log² n) alternating rounds regardless of component
-    * DIAMETER, where [[resolveClusters]]' min-label propagation needs
-    * diameter-many rounds. Near-dup clusters are usually shallow (the
-    * propagation's sweet spot); chain-shaped components — doc A ~ B ~ C
-    * without A ~ C, the shape boilerplate drift produces — make diameter
-    * grow with cluster size, and THIS is the variant that stays flat
-    * there.
-    *
-    * Every edge is kept (hi, lo)-oriented; each round is two
-    * grouped-min + join passes (large-star connects strictly-larger
-    * neighbors to min(N(u) ∪ {u}) over the symmetric view; small-star
-    * repoints all smaller neighbors and u itself at the minimum), both
-    * map-side-partial aggregations on the edge frame — no per-node state
-    * on the driver, `localCheckpoint` per round like the propagation
-    * loop. Convergence = edge set unchanged (exact anti-join check, two
-    * scans of the bounded edge frame). Same output contract as
-    * [[resolveClusters]]: (doc_id, cluster_id = component min) for every
-    * node appearing in some pair — the spec pins both implementations
-    * equal, so either can serve q74's oracle. */
-  def resolveClustersStar(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
-                          maxIter: Int = 30): DataFrame = {
-    val edges0 = pairs
-      .select(greatest(col(aCol), col(bCol)).as("u"), least(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .cut()
-    val edges = Lineage.converge(edges0, maxIter,
-        s"large-star/small-star did not converge in $maxIter rounds") { round =>
-      val edges = round.prev
-      // LARGE-STAR over the symmetric view: (v, min(N(u) ∪ {u})) for v > u
-      val sym = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      val minsL = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val ls = sym.filter(col("v") > col("u")).join(minsL, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // SMALL-STAR on the (hi, lo) orientation: all of N(u) ∪ {u} repoint
-      // at m = min(N(u)) (every neighbor is < u, so m = min(N ∪ {u}))
-      val minsS = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val fromNbrs = ls.join(minsS, "u").filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      val fromSelf = minsS.select(col("u"), col("m").as("v"))
-      fromNbrs.unionByName(fromSelf)
-        .filter(col("u") =!= col("v")).distinct()
-    } { (round, next) =>
-      next.exceptAll(round.prev).isEmpty && round.prev.exceptAll(next).isEmpty
-    }
-    // fixpoint is a star forest: u → component min; roots never appear as u
-    val roots = edges.select(col("v")).distinct()
-      .join(edges.select(col("u")).distinct(), col("v") === col("u"), "left_anti")
-    edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
-      .unionByName(roots.select(col("v").as("doc_id"), col("v").as("cluster_id")))
+    val failure = s"cluster resolution did not converge in $maxIter rounds"
+    Lineage.converge(Graph.selfLabels(und), maxIter, failure)(Graph.hookAndJump(und))(Graph.settled)
+      .select(col("node").as("doc_id"), col("l").as("cluster_id"))
   }
 
   /** C24: eval-set CONTAMINATION check — for each eval document, how many

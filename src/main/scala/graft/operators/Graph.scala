@@ -31,7 +31,7 @@ object Graph {
     * graph queries routinely feed an expensive aggregation here — q209's
     * co-purchase pair expansion was re-run once per branch per operator
     * call. The caller applies its own filter/distinct on top. */
-  private def symmetrize(edges: DataFrame): DataFrame =
+  private[operators] def symmetrize(edges: DataFrame): DataFrame =
     edges.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
@@ -142,45 +142,60 @@ object Graph {
     * and exactly replayable: the component id IS the component's
     * minimum node id.
     *
-    * Scale shape per round: one co-partitioned edge⋈label join, one
-    * min-aggregation, one label-sized self-join, `localCheckpoint`
-    * lineage cut — K bounded shuffles total, zero driver state beyond
-    * the per-round convergence scalar: Σ labels is monotonically
-    * non-increasing, so an unchanged sum proves the fixed point and
-    * later rounds are skipped (the oracle replays ALL R rounds —
-    * post-convergence rounds are no-ops, so the results agree).
+    * Scale shape per round ([[hookAndJump]]): one co-partitioned
+    * edge⋈label join, one min-aggregation, one label-sized self-join,
+    * `localCheckpoint` lineage cut — K bounded shuffles total, zero
+    * driver state. [[settled]] skips the rounds after the fixed point
+    * (the oracle replays ALL R rounds — post-convergence rounds are
+    * no-ops, so the results agree).
     *
     * @param edges (src, dst) — treated as UNDIRECTED (symmetrized
     *              internally).
     * @return (node, comp) for every node with ≥1 edge. */
   def components(edges: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 1)
-    val und = symmetrize(edges)
-      .distinct().cut()
-    val lbl0 = und.select(col("src").as("node")).distinct()
+    val und = symmetrize(edges).distinct().cut()
+    Lineage.iterate(selfLabels(und), rounds)(hookAndJump(und))(settled)
+      .select(col("node"), col("l").as("comp"))
+  }
+
+  /** Round 0's frame of the connected-components kernel: every node of
+    * the symmetric edge frame `und` labelled by itself, (node, l). */
+  private[operators] def selfLabels(und: DataFrame): DataFrame =
+    und.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("l"))
       .cut()
-    val labelSum = Lineage.once(
-      _.agg(sum(col("l").cast("decimal(38,0)"))).head().getDecimal(0))
-    val lbl = Lineage.iterate(lbl0, rounds) { round =>
-      val lbl = round.prev
-      // nbMin feeds BOTH sides of the pointer-hop self-join — cached so
-      // the neighbor-min aggregation runs once per round, not once per side
-      val nbMin = round.persist(und.join(lbl, und("src") === lbl("node"))
-        .select(und("dst").as("node"), col("l"))
-        .unionByName(lbl)
-        .groupBy("node").agg(min(col("l")).as("l")))
-      // pointer hop l ← label(l): rename one side so the self-join
-      // resolves unambiguously
-      val parent = nbMin.select(col("node").as("pnode"), col("l").as("pl"))
-      nbMin.join(parent, col("l") === col("pnode"))
-        .select(col("node"), col("pl").as("l"))
-    } { (round, next) =>
-      // round 0 always moves labels on a non-edgeless graph: skip its sum
-      round.index > 0 && labelSum(round.prev) == labelSum(next)
-    }
-    lbl.select(col("node"), col("l").as("comp"))
+
+  /** The connected-components kernel's one round, shared by
+    * [[components]] and [[Dedup.resolveClusters]] (the q188, q239 and
+    * q242 oracles replay it round for round: its body must not change).
+    * Hook: each node takes the min label over its closed neighborhood in
+    * `und`. Jump: it then takes its new label's own new label. Ids only
+    * need an ordering, so string ids work as well as numeric ones. The
+    * round frame is (node, was, l), `was` being the node's label before
+    * the round, so [[settled]] can see which labels moved. */
+  private[operators] def hookAndJump(und: DataFrame)(round: Lineage.Round): DataFrame = {
+    val lbl = round.prev.select(col("node"), col("l"))
+    // nbMin feeds BOTH sides of the pointer-hop self-join — cached so
+    // the neighbor-min aggregation runs once per round, not once per side
+    val nbMin = round.persist(und.join(lbl, und("src") === lbl("node"))
+      .select(und("dst").as("node"), col("l"), lit(null).as("was"))
+      .unionByName(lbl.select(col("node"), col("l"), col("l").as("was")))
+      .groupBy("node").agg(min(col("l")).as("l"), max(col("was")).as("was")))
+    // pointer hop l ← label(l): rename one side so the self-join
+    // resolves unambiguously
+    val parent = nbMin.select(col("node").as("pnode"), col("l").as("pl"))
+    nbMin.join(parent, col("l") === col("pnode"))
+      .select(col("node"), col("was"), col("pl").as("l"))
   }
+
+  /** The kernel's stop rule: labels never rise, so a round that moved no
+    * label is the fixed point, and every later round is a no-op. One
+    * filtered `isEmpty` on the round's checkpoint, no shuffle. Round 0
+    * moves a label whenever two distinct nodes share an edge, so its test
+    * is skipped. */
+  private[operators] def settled(round: Lineage.Round, next: DataFrame): Boolean =
+    round.index > 0 && next.filter(col("l") =!= col("was")).isEmpty
 
   /** C155: MINIMUM SPANNING FOREST by distributed BORŮVKA — the
     * clustering backbone operator (single-linkage dendrograms, network

@@ -28,13 +28,16 @@ import org.apache.spark.sql.types.DecimalType
 object IncrementalAgg {
 
   private val Dec = DecimalType(18, 2)
+  /** The state's sum type: what [[merge]]'s sum of it yields, so a state
+    * keeps one schema from its first version on. */
+  private val SumDec = DecimalType(38, 2)
 
   /** Aggregate raw rows into mergeable state — run this on each increment
     * (and once on history to bootstrap). */
   def buildState(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame =
     df.groupBy(keys.map(col): _*).agg(
       count(lit(1)).as("state_n"),
-      sum(col(valueCol).cast(Dec)).as("state_sum"),
+      sum(col(valueCol).cast(Dec)).cast(SumDec).as("state_sum"),
       min(col(valueCol)).as("state_min"),
       max(col(valueCol)).as("state_max"))
 

@@ -59,10 +59,11 @@ object FileSink {
   /** B42: snapshot RETENTION vacuum — the state-hygiene half of the
     * snapshot layout: diff-based syncs only ever read the LATEST run's
     * snapshot, so older runs are pure storage cost; keep the newest
-    * `keepRuns` per sync (run ids ordered lexicographically — the
-    * timestamp-shaped ids [[snapshot]] callers use sort correctly) and
-    * delete the rest. Returns the deleted paths for the run log. Driver
-    * fs-metadata work only — no data is read. */
+    * `keepRuns` per sync and delete the rest. Run ids order by length,
+    * then by name: the counter ids `SyncRunner.runDiff` writes (1, 2, …,
+    * 10) sort numerically, and fixed-width timestamp ids sort by time.
+    * Returns the deleted paths for the run log. Driver fs-metadata work
+    * only — no data is read. */
   def vacuumSnapshots(spark: org.apache.spark.sql.SparkSession, root: String,
                       keepRuns: Int): Seq[String] = {
     require(keepRuns >= 1, "must keep at least the latest run")
@@ -74,7 +75,7 @@ object FileSink {
       .filter(_.getPath.getName.startsWith("sync_id=")).foreach { sync =>
         val runs = fs.listStatus(sync.getPath).filter(_.isDirectory)
           .filter(_.getPath.getName.startsWith("run_id="))
-          .sortBy(_.getPath.getName)(Ordering[String].reverse)
+          .sortBy { r => val n = r.getPath.getName; (n.length, n) }(Ordering[(Int, String)].reverse)
         runs.drop(keepRuns).foreach { old =>
           fs.delete(old.getPath, true)
           deleted += old.getPath.toString

@@ -282,8 +282,7 @@ final class SyncRunner(store: StateStore, threshold: ErrorThreshold = ErrorThres
     // consumable by the caller.
     val runId = store.get(Seq(s"syncId=$syncId", "$runSeq")).map(_.toLong).getOrElse(0L) + 1
     store.set(Seq(s"syncId=$syncId", "$runSeq"), runId.toString)
-    val newPath = s"$snapshotRoot/sync_id=$syncId/run_id=$runId"
-    curr.write.mode("overwrite").parquet(newPath)
+    val newPath = graft.sinks.FileSink.snapshot(curr, snapshotRoot, syncId, runId.toString)
     store.set(Seq(s"syncId=$syncId", "$snapshot"), newPath)
     newPath
   }

@@ -125,9 +125,6 @@ object ScaleProbe {
       // dup-saturated: every amplification copy duplicates every suffix,
       // so spans saturate — rounds stay log2(maxDocLen), cost ~N·logL
       run("suffix_spans", k)(graft.operators.Suffix.dupSpanProfile(docs).count())
-      // same dup-saturated pair blow-up as cluster_resolve, star variant
-      run("cluster_star", k)(
-        Dedup.resolveClustersStar(Dedup.minhashPairsPortable(docs, bucketCap = 1000)).count())
     }
     for (k <- Seq(1, 4, 16)) {
       val docs = amplify(t.documents, "doc_id", k)

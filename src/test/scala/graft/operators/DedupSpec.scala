@@ -165,25 +165,43 @@ class DedupSpec extends SparkSuite {
     assert(expected.exists(p => p._1 == 1L && p._2 == 4L), "cross-band pair present in fixture")
   }
 
-  test("large-star/small-star clusters equal min-label propagation on the corpus") {
+  test("resolveClusters equals a driver-side union-find on the corpus") {
     val pairs = Dedup.ngramJaccardPairs(
       spark.read.parquet(s"$sfDir/documents.parquet"), groupCol = "source", threshold = 0.3)
-    val prop = Dedup.resolveClusters(pairs).as[(Long, Long)].collect().toSet
-    val star = Dedup.resolveClustersStar(pairs).as[(Long, Long)].collect().toSet
-    assert(prop.nonEmpty && star == prop,
-      "both CC formulations must produce identical (doc_id, cluster_id = component min)")
+    val want = UnionFind(pairs.select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq)
+    val got = Dedup.resolveClusters(pairs).as[(Long, Long)].collect().toMap
+    assert(want.nonEmpty && got == want,
+      "cluster_id must be the min doc id of the doc's component")
   }
 
-  test("large-star/small-star converges on a long chain where propagation is diameter-bound") {
-    // path graph 0-1-2-…-63: diameter 63. Min-label propagation moves the
-    // label one hop per round (needs ~63); the star alternation closes in
-    // O(log² n) — well under 8 combined rounds.
+  test("resolveClusters closes an ordered 64-node chain within 8 rounds") {
+    // path 0-1-…-63, diameter 63: the pointer hop doubles a label's reach
+    // per round, so 7 rounds close it where plain propagation needs 64
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val star = Dedup.resolveClustersStar(chain, maxIter = 8).as[(Long, Long)].collect()
-    assert(star.length == 64 && star.forall(_._2 == 0L), "one component rooted at the min id")
-    intercept[IllegalArgumentException] {
-      Dedup.resolveClusters(chain, maxIter = 8) // diameter-bound: cannot close in 8
-    }
+    val got = Dedup.resolveClusters(chain, maxIter = 8).as[(Long, Long)].collect()
+    assert(got.length == 64 && got.forall(_._2 == 0L), "one component rooted at the min id")
+  }
+
+  test("resolveClusters fails loudly on a shuffled-id 64-node chain it cannot close in 8 rounds") {
+    // the same path with its ids shuffled: labels no longer fall in path
+    // order, so the budget runs out; the clusters are never half-returned
+    val ids = new scala.util.Random(15).shuffle((0L until 64L).toVector)
+    val chain = ids.zip(ids.tail).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException](Dedup.resolveClusters(chain, maxIter = 8))
+    assert(e.getMessage.contains("did not converge in 8 rounds"))
+    val got = Dedup.resolveClusters(chain, maxIter = 64).as[(Long, Long)].collect()
+    assert(got.length == 64 && got.forall(_._2 == 0L), "a large enough budget closes it")
+  }
+
+  test("resolveClusters equals union-find on random string-id pairs with self-pairs") {
+    val rnd = new scala.util.Random(41)
+    val pairs = Seq.fill(90)((s"d${rnd.nextInt(120)}", s"d${rnd.nextInt(120)}")) ++
+      Seq(("d7", "d7"), ("solo", "solo"))
+    assert(pairs.count { case (a, b) => a == b } >= 2)
+    val got = Dedup.resolveClusters(pairs.toDF("doc_a", "doc_b")).as[(String, String)]
+      .collect().toMap
+    assert(got == UnionFind(pairs), "string ids cluster under their own ordering")
+    assert(got("solo") == "solo", "a self-pair alone is its own cluster")
   }
 
   test("edit-distance band cap bounds degenerate constant-length bands by default") {

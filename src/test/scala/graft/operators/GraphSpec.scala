@@ -301,24 +301,11 @@ class GraphSpec extends SparkSuite {
 
   // -------------------------------------------------------- components
 
-  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val par = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = par.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); par(x) = r; r }
-    }
-    for ((a, b) <- edges) {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) par(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    par.keys.map(x => x -> find(x)).toMap
-  }
-
   test("C108: components equal union-find on a random sparse fixture") {
     val rnd = new scala.util.Random(23)
     val edges = Seq.fill(60)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
       .filter { case (a, b) => a != b }
-    val want = unionFind(edges)
+    val want = UnionFind(edges)
     val got = Graph.components(edges.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
     assert(got == want, "component labels must be the per-component min node id")

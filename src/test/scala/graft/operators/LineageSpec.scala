@@ -108,7 +108,6 @@ class LineageSpec extends SparkSuite {
     ("louvainMove", 4, () => Graph.louvainMove(path, sweeps = 4), 41L),
     ("minimumSpanningForest", 8, () => Graph.minimumSpanningForest(wpath), 40L),
     ("resolveClusters", 3, () => Dedup.resolveClusters(path, "src", "dst", maxIter = 45), 41L),
-    ("resolveClustersStar", 3, () => Dedup.resolveClustersStar(path, "src", "dst"), 41L),
     ("Hierarchy.ancestors", 2, () => Hierarchy.ancestors(path, "dst", "src"), 820L),
     ("Bpe.train", 2, () => Bpe.train(docs, merges = 6).symbols, 22L),
     ("Bpe.encodeStats", 5, () => Bpe.encodeStats(docs, Bpe.train(docs, merges = 6)), 2L),

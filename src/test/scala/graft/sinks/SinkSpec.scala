@@ -69,6 +69,16 @@ class SinkSpec extends SparkSuite {
     assert(new java.io.File(s"$root/sync_id=s2/run_id=2024-01-02").exists)
   }
 
+  test("vacuumSnapshots orders counter run ids numerically: run 11 outlives run 9") {
+    // SyncRunner.runDiff numbers its runs 1, 2, …; as strings "9" > "11"
+    val root = tmp()
+    val one = df.limit(1)
+    for (r <- 1 to 11) FileSink.snapshot(one, root, "s", r.toString)
+    val deleted = FileSink.vacuumSnapshots(spark, root, keepRuns = 1)
+    assert(new java.io.File(s"$root/sync_id=s/run_id=11").exists, "the newest run was deleted")
+    assert(deleted.map(_.split("run_id=").last.toInt).sorted == (1 to 10))
+  }
+
   test("rangeLayout: disjoint per-file key ranges; a key filter touches few files") {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
